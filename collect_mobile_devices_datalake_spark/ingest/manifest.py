@@ -214,7 +214,10 @@ def read_committed(
     """Snapshot read: exactly the files listed by committed manifests.
 
     Orphans from crashed transactions are invisible even though they sit
-    in the same directories. ``schema`` supplies the empty-lake result.
+    in the same directories. ``schema`` supplies the empty-lake result,
+    as a relation the optimizer can see is empty (``limit(0)`` folds to
+    an empty ``LocalRelation``): a join or anti-join against a table
+    with nothing committed yet is then pruned from the plan, not run.
     ``as_of=<txn_id>`` reads the historical snapshot as of that commit
     (see `committed_files`) — a reproducibility pin: a training run that
     records its txn id re-reads byte-identical inputs later even though
@@ -226,7 +229,7 @@ def read_committed(
             raise FileNotFoundError(
                 f"no committed files under {table_prefix!r} and no schema given"
             )
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame([], schema).limit(0)
     return spark.read.parquet(*files)
 
 

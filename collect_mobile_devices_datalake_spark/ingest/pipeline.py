@@ -19,8 +19,13 @@ Reproduces the reference's EP2/EP3 write path (SURVEY §3) Spark-first:
   UNcommitted batch (crash before publish → re-ingest under a new txn)
 
 Scale notes: appends are partitioned by ``source`` so per-source scans
-prune; the resume anti-join shuffles on the url key only (no payload);
-re-runs are incremental by construction; snapshot reads list data files
+prune. The resume is ONE ``left_anti`` join of the page scan against the
+committed saved_list, so the frontier is scanned once and each pending
+page is fetched once. On a first crawl the saved_list is an empty
+relation and the optimizer drops the join; on a re-crawl Catalyst picks
+a broadcast anti-join from the saved_list's file size (no page shuffle)
+and sort-merge once the checkpoint outgrows the broadcast threshold.
+Re-runs are incremental by construction; snapshot reads list data files
 from committed manifests only (orphans from crashed writers invisible).
 """
 
@@ -32,7 +37,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.normalize import brand_model_split, merge_last_wins, to_key
-from ..operators.resume import resume_anti_join
 from ..sources.parse import PARSERS
 
 SPEC_SPINE = ["source", "brand", "model", "src_url", "img_url", "crawled_at"]
@@ -97,6 +101,25 @@ def _read_saved(spark: SparkSession, lake_dir: str, source: str) -> DataFrame:
     )
 
 
+def pending_pages(
+    spark: SparkSession, pages: DataFrame, lake_dir: str, source: str
+) -> DataFrame:
+    """The pages a crawl still has to ingest: fetched OK, with a url, and
+    not yet checkpointed in the source's committed saved_list.
+
+    A direct ``left_anti`` on the full pages, not `resume_anti_join`'s
+    url-only groupBy: ingest needs the page payload, and recovering it
+    from a url list would take a second scan of the frontier (a second
+    fetch of every page over HTTP) plus a join that shuffles the html.
+    Duplicate-url pages all pass, as with the reference's list subtract.
+    A null url never matches the saved_list, so it is filtered out here:
+    such a page could never be checkpointed and would be re-ingested by
+    every run.
+    """
+    ok = pages.filter((F.col("status") == 200) & F.col("url").isNotNull())
+    return ok.join(_read_saved(spark, lake_dir, source), "url", "left_anti")
+
+
 def ingest_source(
     spark: SparkSession, pages: DataFrame, lake_dir: str, source: str
 ) -> int:
@@ -105,57 +128,55 @@ def ingest_source(
     Returns the number of newly ingested records. Re-running with the
     same pages is a no-op (resume anti-join), matching ``crawl_resume``.
     """
-    ok = pages.filter(F.col("status") == 200)
-    saved = _read_saved(spark, lake_dir, source)
-    pending = resume_anti_join(ok.select(F.col("url")), saved)
-    todo = ok.join(pending, "url", "left_semi")
-
     # Parse ONCE per batch: the fetch→parse pandas-UDF pipeline is the
-    # dominant batch cost, and four downstream actions consume it (count,
-    # data append, saved_list append, dead-letter probe+write). Persisting
-    # the parsed frame makes every consumer read the materialized batch
-    # instead of re-running the UDF — asserted by the accumulator test in
-    # tests/test_ingest.py. (At cluster scale the same effect comes from a
-    # single staged write + observe() metrics; persist is the in-memory
-    # equivalent for a batch that, post-resume-filter, is bounded by the
-    # crawl frontier, not the lake size.)
-    parsed = PARSERS[source](todo).persist()
+    # dominant batch cost, and every later action reads it (the counts,
+    # the data append, the saved_list append, the dead-letter write).
+    # Persisting the parsed frame makes each of them read the
+    # materialized batch instead of re-running the scan and the UDF —
+    # asserted by the accumulator test in tests/test_ingest.py. The
+    # normalize step after it is a cheap projection and is not persisted.
+    # (At cluster scale the same effect comes from a single staged write
+    # + observe() metrics; persist is the in-memory equivalent for a
+    # batch that, post-resume-filter, is bounded by the crawl frontier,
+    # not the lake size.)
+    parsed = PARSERS[source](pending_pages(spark, pages, lake_dir, source)).persist()
     try:
         # quarantine: parse failures (entries NULL, e.g. key/value length
         # mismatch — app.js:626) are written to a dead-letter table and NOT
         # checkpointed, so the next run retries them (reference behavior #43).
-        good = parsed.filter(F.col("entries").isNotNull())
-        bad = parsed.filter(F.col("entries").isNull()).select("url")
-
-        records = normalize_records(good, source).persist()
-        try:
-            n = records.count()
-            _log(spark, lake_dir, source, "ingest_batch", n)
-            # ONE manifest transaction covers the data files, the
-            # saved_list checkpoint, and the dead-letter probe: either a
-            # reader sees all of this batch (data + checkpoint) or none
-            # of it — the atomicity the reference's two-phase
-            # insert-then-checkpoint (app.js:441-453) lacks. The data
-            # layout is unchanged: one subdirectory per source (records
-            # carry their own `source` column, so this is plain layout
-            # partitioning and per-source scans touch one directory).
-            tables: list[tuple[str, DataFrame]] = []
-            if n:
-                tables.append((f"device_specs/{source}", records))
-                tables.append(
-                    (
-                        f"saved_list/{source}",
-                        records.select(F.col("src_url").alias("url")),
-                    )
+        # One aggregation counts both sides of the split.
+        n, n_bad = parsed.agg(
+            F.count("entries"), F.count_if(F.col("entries").isNull())
+        ).first()
+        _log(spark, lake_dir, source, "ingest_batch", n)
+        # ONE manifest transaction covers the data files, the saved_list
+        # checkpoint, and the dead letters: either a reader sees all of
+        # this batch (data + checkpoint) or none of it — the atomicity
+        # the reference's two-phase insert-then-checkpoint
+        # (app.js:441-453) lacks. The data layout is one subdirectory
+        # per source (records carry their own `source` column, so this
+        # is plain layout partitioning and per-source scans touch one
+        # directory).
+        tables: list[tuple[str, DataFrame]] = []
+        if n:
+            records = normalize_records(
+                parsed.filter(F.col("entries").isNotNull()), source
+            )
+            tables.append((f"device_specs/{source}", records))
+            tables.append(
+                (f"saved_list/{source}", records.select(F.col("src_url").alias("url")))
+            )
+        if n_bad:
+            tables.append(
+                (
+                    f"dead_letter/{source}",
+                    parsed.filter(F.col("entries").isNull()).select("url"),
                 )
-            if bad.limit(1).count():
-                tables.append((f"dead_letter/{source}", bad))
-            if tables:
-                from . import manifest
+            )
+        if tables:
+            from . import manifest
 
-                manifest.commit_tables(lake_dir, tables)
-        finally:
-            records.unpersist()
+            manifest.commit_tables(lake_dir, tables)
     finally:
         parsed.unpersist()
     return n

@@ -13,6 +13,14 @@ The Spark-native form is a ``left_anti`` join after ``dropDuplicates``:
 - Reference bug (app.js:476: ``saved_list == []`` is always false) is NOT
   reproduced; empty saved-list is simply an anti-join against an empty
   relation, which returns the whole frontier — the intended behavior.
+
+`resume_anti_join` answers the URL-list question (the ``resume_pending``
+rows): which urls are pending. The ingest pipeline does not use it: it
+needs the pending pages' payload, and joining that back onto a url list
+would scan the frontier twice and shuffle every page's html. Ingest
+therefore anti-joins the pages themselves against the saved_list
+(``ingest.pipeline.pending_pages``), which is a broadcast join — or no
+join at all on a first crawl — with the page scan streaming through.
 """
 
 from __future__ import annotations

@@ -8,8 +8,11 @@ a stdlib ``http.server`` on 127.0.0.1 serves gsmarena-shaped pages
 (with 404s sprinkled in), the ``page_range`` Python DataSource fetches
 them over real sockets from its executor-side partitions
 (``option("base_url", ...)`` → ``_fetch``), and the result runs the
-full ingest path — 200-gate, resume anti-join, pandas-UDF parse,
-normalize, one atomic manifest commit — exactly like the fixture path.
+full ingest path — 200-gate, resume anti-join against the saved_list,
+pandas-UDF parse, normalize, one atomic manifest commit — exactly like
+the fixture path. The server counts requests, so the tests also pin
+that one ingest fetches each frontier page exactly once, on the first
+crawl and on the no-op re-crawl alike.
 """
 
 from __future__ import annotations
@@ -99,6 +102,19 @@ def lake():
     shutil.rmtree(d, ignore_errors=True)
 
 
+def _page_range(spark, base_url):
+    register_page_range_source(spark)
+    return (
+        spark.read.format("page_range")
+        .option("source", "gsmarena")
+        .option("start", 0)
+        .option("end", 40)
+        .option("numPartitions", 4)
+        .option("base_url", base_url)
+        .load()
+    )
+
+
 def test_fetch_surfaces_http_status_as_data(http_srv):
     # non-2xx is a ROW (status feeds the 200-gate), not an exception
     url, pid, status, html = _fetch(http_srv, "gsmarena", 3)
@@ -109,16 +125,7 @@ def test_fetch_surfaces_http_status_as_data(http_srv):
 
 
 def test_http_fetch_ingest_e2e(spark, http_srv, lake):
-    register_page_range_source(spark)
-    pages = (
-        spark.read.format("page_range")
-        .option("source", "gsmarena")
-        .option("start", 0)
-        .option("end", 40)
-        .option("numPartitions", 4)
-        .option("base_url", http_srv)
-        .load()
-    )
+    pages = _page_range(spark, http_srv)
     rows = pages.collect()
     assert len(rows) == 40
     bad = {r.page_id for r in rows if r.status != 200}
@@ -138,3 +145,19 @@ def test_http_fetch_ingest_e2e(spark, http_srv, lake):
     # re-run over the same (re-fetched) pages: resume makes it a no-op
     n2 = ingest_source(spark, pages, lake, "gsmarena")
     assert n2 == 0
+
+
+def test_ingest_fetches_each_page_once(spark, http_srv, lake):
+    """The frontier is scanned once per ingest: every page — 404s
+    included, since the status gate runs on the fetched row — costs
+    exactly one request, whether it is pending (first crawl) or already
+    checkpointed (no-op re-crawl)."""
+    pages = _page_range(spark, http_srv)
+
+    _Handler.hits = 0
+    assert ingest_source(spark, pages, lake, "gsmarena") == 38
+    assert _Handler.hits == 40
+
+    _Handler.hits = 0
+    assert ingest_source(spark, pages, lake, "gsmarena") == 0
+    assert _Handler.hits == 40

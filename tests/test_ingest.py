@@ -95,6 +95,72 @@ def test_ingest_geekbench_ios_brand_override(spark, lake):
     assert android.filter(F.col("model").startswith("Brand#")).count() == 0
 
 
+def test_resume_gate_null_url_non_200_and_duplicate_urls(spark, lake):
+    """What the resume gate lets through. A page with a null url or a
+    non-200 status is neither ingested nor checkpointed. Duplicate-url
+    pages in one batch all land, as rows of the raw table and of the
+    saved_list (the reference's list subtract keeps duplicates);
+    `device_specs_view` collapses them; and the re-run is a no-op."""
+    from collect_mobile_devices_datalake_spark.ingest import manifest
+
+    part = load_table(spark, "part", SF).filter(F.col("p_partkey").between(1, 6))
+    pages = spec_pages(part, "versus")  # versus renders every page as 200
+    url = F.col("url")
+    batch = (
+        pages.filter(~url.endswith("/p_5") & ~url.endswith("/p_6"))
+        .unionByName(pages.filter(url.endswith("/p_1")))
+        .unionByName(
+            pages.filter(url.endswith("/p_5")).withColumn("url", F.lit(None).cast("string"))
+        )
+        .unionByName(pages.filter(url.endswith("/p_6")).withColumn("status", F.lit(503)))
+    )
+    want = sorted([f"https://example.com/devices/versus/p_{k}" for k in (1, 1, 2, 3, 4)])
+
+    assert ingest_source(spark, batch, lake, "versus") == 5
+    raw = manifest.read_committed(spark, lake, "device_specs/versus")
+    assert sorted(r.src_url for r in raw.collect()) == want
+    def saved_urls():
+        saved = manifest.read_committed(spark, lake, "saved_list/versus")
+        return sorted(r.url for r in saved.collect())
+
+    assert saved_urls() == want
+    assert manifest.committed_files(lake, "dead_letter") == []
+    assert device_specs_view(spark, lake).count() == 4
+
+    assert ingest_source(spark, batch, lake, "versus") == 0
+    assert saved_urls() == want
+
+
+def test_parse_failures_are_quarantined_and_retried(spark, lake):
+    """A page whose parse fails (geekbench name/score lists of unequal
+    length → entries NULL, app.js:626) goes to the dead-letter table in
+    the batch's transaction and is NOT checkpointed, so every re-run
+    retries it (and quarantines it again while it still fails)."""
+    from collect_mobile_devices_datalake_spark.ingest import manifest
+
+    part = load_table(spark, "part", SF).filter(F.col("p_partkey").between(4, 7))
+    pages = spec_pages(part, "geekbench")  # all four render as status 200
+    broken = F.col("url").endswith("/p_5")
+    pages = pages.withColumn(
+        "html",
+        F.when(broken, F.concat("html", F.lit('<span class="score">1</span>'))).otherwise(
+            F.col("html")
+        ),
+    )
+    bad_url = pages.filter(broken).first()["url"]
+
+    def table_urls(table, col):
+        return sorted(r[col] for r in manifest.read_committed(spark, lake, table).collect())
+
+    assert ingest_source(spark, pages, lake, "geekbench") == 3
+    assert table_urls("dead_letter/geekbench", "url") == [bad_url]
+    assert bad_url not in table_urls("saved_list/geekbench", "url")
+    assert len(table_urls("device_specs/geekbench", "src_url")) == 3
+
+    assert ingest_source(spark, pages, lake, "geekbench") == 0
+    assert table_urls("dead_letter/geekbench", "url") == [bad_url, bad_url]
+
+
 def test_parse_runs_once_per_batch(spark, lake, monkeypatch):
     """The parse pipeline must execute ONCE per ingest batch even though four
     downstream actions consume it (count, data append, saved_list append,

@@ -77,6 +77,17 @@ def test_crash_before_publish_is_invisible(spark, lake):
     assert manifest.read_committed(spark, lake, "t").count() == 7
 
 
+def test_empty_committed_table_prunes_joins(spark, lake):
+    """A table with nothing committed reads as an empty relation the
+    optimizer can see: an anti-join against it folds to its left side,
+    and no Join is left in the optimized plan."""
+    empty = manifest.read_committed(spark, lake, "saved_list/x", schema="url string")
+    frontier = spark.range(10).select(F.col("id").cast("string").alias("url"))
+    q = frontier.join(empty, "url", "left_anti")
+    assert "Join" not in q._jdf.queryExecution().optimizedPlan().toString()
+    assert q.count() == 10
+
+
 def manifest_file_count(lake: str, table: str) -> int:
     return len(manifest.committed_files(lake, table))
 

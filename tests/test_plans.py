@@ -4,6 +4,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from collect_mobile_devices_datalake_spark.ingest.pipeline import (
+    ingest_source,
+    pending_pages,
+)
 from collect_mobile_devices_datalake_spark.operators.resume import resume_anti_join
 from collect_mobile_devices_datalake_spark.plans.explain import (
     count_exchanges,
@@ -13,6 +17,8 @@ from collect_mobile_devices_datalake_spark.plans.explain import (
 )
 from collect_mobile_devices_datalake_spark.registry import REGISTRY, _ensure_loaded
 from collect_mobile_devices_datalake_spark.session import load_table
+from collect_mobile_devices_datalake_spark.sources.fixtures import spec_pages
+from collect_mobile_devices_datalake_spark.sources.parse import PARSERS
 
 _ensure_loaded()
 SF = "/root/testdata/sf0.001"
@@ -83,6 +89,63 @@ def test_resume_hot_key_collapses_map_side(spark):
     rows = {r["url"] for r in q.collect()}
     assert "https://h.example/hot" in rows
     assert len(rows) == 1 + 1_000
+
+
+def _gsmarena_pages(spark):
+    return spec_pages(load_table(spark, "part", SF), "gsmarena")
+
+
+def test_first_crawl_streams_pages_into_the_parse(spark, tmp_path):
+    """Crawl into an empty lake: the saved_list is an empty relation the
+    optimizer can see, so the resume anti-join is pruned and the page
+    scan feeds the parse UDF directly — no Exchange, no join."""
+    q = PARSERS["gsmarena"](
+        pending_pages(spark, _gsmarena_pages(spark), str(tmp_path), "gsmarena")
+    )
+    plan = formatted_plan(q)
+    assert "ArrowEvalPython" in plan, plan
+    assert "Exchange" not in plan, plan
+    assert "Join" not in plan, plan
+
+
+def test_recrawl_broadcasts_the_saved_list(spark, tmp_path):
+    """Re-crawl against a committed saved_list: one broadcast left-anti
+    join; the pages (and their html) are never hash-shuffled."""
+    lake = str(tmp_path)
+    pages = _gsmarena_pages(spark)
+    ingest_source(spark, pages, lake, "gsmarena")
+    q = pending_pages(spark, pages, lake, "gsmarena")
+    plan = formatted_plan(q)
+    assert "BroadcastHashJoin LeftAnti BuildRight" in plan, plan
+    assert count_exchanges(q) == 0, plan
+
+
+def _jobs_in_group(spark, group: str, action) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_crawl_and_recrawl_job_ceilings(spark, tmp_path):
+    """Per-call job ceilings for the paper's crawl (ROADMAP item 2). A
+    crawl is the fused record/quarantine count (one scan, one parse into
+    the cache), the log commit, and the data + checkpoint writes; a
+    no-op re-crawl adds the saved_list broadcast and writes only the log."""
+    lake = str(tmp_path)
+    pages = _gsmarena_pages(spark)
+    crawl = _jobs_in_group(
+        spark, f"crawl-{tmp_path.name}", lambda: ingest_source(spark, pages, lake, "gsmarena")
+    )
+    recrawl = _jobs_in_group(
+        spark, f"recrawl-{tmp_path.name}", lambda: ingest_source(spark, pages, lake, "gsmarena")
+    )
+    assert 0 < crawl <= 6, crawl
+    assert 0 < recrawl <= 6, recrawl
 
 
 def test_knn_broadcasts_queries_not_corpus(spark):
