@@ -119,7 +119,7 @@ STREAMING = [
     # (the saved-set membership bitmap resume_bloom_prefilter probes)
     "streaming_bloom_state",
     # r14: the ninth lattice family — per-source MIN/MAX ingest profile,
-    # the ~40-line plug-in that certifies the lattice.py protocol
+    # a single-declaration plug-in that certifies the lattice.py protocol
     # extraction (streaming/profile_maintenance.py)
     "streaming_profile_state",
     # r15: the tenth lattice family — Misra-Gries/SpaceSaving top-k

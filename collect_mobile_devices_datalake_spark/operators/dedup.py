@@ -15,10 +15,10 @@ from __future__ import annotations
 
 import itertools
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.text import rolling_hash, word_ngrams
+from ..functions.text import rolling_hash
 from ..registry import register
 from ..session import fan_out, load_table
 
@@ -46,10 +46,6 @@ _SIG_SQL = (
     f"list_transform(range(0, {NUM_PERM}), "
     f"j -> list_min(list_transform(h, x -> (x * (2*j + 1) + (j*j + 7)) % 1000000007)))"
 )
-
-
-def _shingles(text: Column | str) -> Column:
-    return F.array_distinct(word_ngrams(text, 3))
 
 
 def shingled_docs(docs: DataFrame) -> DataFrame:

@@ -143,7 +143,7 @@ def _bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # engines — no sign-bit case to reason about cross-engine. Bitwise OR
 # over packed words is an idempotent/commutative/associative lattice
 # join (the powerset under union), which is what makes this form
-# streamable (streaming/sketch_maintenance.py::read_bloom_state).
+# streamable (the ``BLOOM`` family in streaming/sketch_maintenance.py).
 _BLOOM_WORD = 62
 
 

@@ -21,12 +21,6 @@ N_PLANES = 12
 QUERY_MOD = 25  # vec_id % 25 == 0 → 20 query vectors over the 500-row table
 
 
-def _queries_df(emb: DataFrame) -> DataFrame:
-    return emb.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-
-
 @register(
     "knn_bruteforce",
     oracle=f"""
@@ -470,12 +464,6 @@ def _multiprobe(
 # session-lifetime cache: index key -> parquet path of the built index table
 # (temp dirs, reclaimed at process exit)
 _INDEX_CACHE: dict[str, str] = {}
-
-
-def clear_index_cache() -> None:
-    """Invalidation hook: drop every cached index path (next probe rebuilds)."""
-    _INDEX_CACHE.clear()
-    _PLANES_CACHE.clear()
 
 
 def _corpus_fingerprint(sf_dir: str, table: str = "embeddings") -> str:

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..session import load_table
+from ..streaming import lattice
 from .relational import dsum
 
 
@@ -40,24 +41,17 @@ SESSION_GAP = "30 minutes"
 # result (bench.py, and the pytest session via a conftest finalizer)
 # call cleanup_stream_temp_roots() afterwards; stale roots from crashed
 # runs are swept by prefix+pid-liveness in sweep_stale_stream_temp_roots.
-STREAM_TEMP_PREFIXES = (
-    "roll_day_",
-    "surv_stream_",
-    "cms_stream_",
-    "logbin_stream_",
-    "psamp_stream_",
-    "kmv_stream_",
-)
+_STREAM_TEMP_PREFIX = "stream_root_"
 _STREAM_TEMP_ROOTS: list[str] = []
 
 
-def _stream_temp_root(prefix: str) -> str:
+def _stream_temp_root() -> str:
     import os
     import tempfile
 
     # Embed the owning pid so a concurrent sweep from another process can
     # tell live roots from stranded ones (see sweep_stale_stream_temp_roots).
-    base = tempfile.mkdtemp(prefix=f"{prefix}pid{os.getpid()}_")
+    base = tempfile.mkdtemp(prefix=f"{_STREAM_TEMP_PREFIX}pid{os.getpid()}_")
     _STREAM_TEMP_ROOTS.append(base)
     return base
 
@@ -95,6 +89,39 @@ def cleanup_stream_temp_roots() -> None:
         shutil.rmtree(_STREAM_TEMP_ROOTS.pop(), ignore_errors=True)
 
 
+def _lattice_guard(
+    spark: SparkSession,
+    family: lattice.LatticeFamily,
+    frame: DataFrame,
+    key_col: str,
+) -> DataFrame:
+    """The two-run restart protocol every lattice guard row certifies:
+    ~3/4 of ``frame`` lands over several files and one availableNow run
+    folds it into several bounded partials (maxFilesPerTrigger=2); the
+    late quarter lands after that stream stopped and a second run on the
+    SAME checkpoint absorbs only the new files; the partials are then
+    compacted under the family's lattice-class protocol and the state is
+    read back (reading is merging)."""
+    import os
+
+    base = _stream_temp_root()
+    src = os.path.join(base, "in")
+    state = os.path.join(base, "state")
+    ckpt = os.path.join(base, "ckpt")
+    key = F.col(key_col) % 4
+    frame.filter(key != 0).coalesce(4).write.mode("append").parquet(src)
+    with _data_sized_width(spark, src):
+        _await_or_fail(lattice.start_maintenance_stream(
+            spark, family, src, state, ckpt, max_files_per_trigger=2
+        ))
+        frame.filter(key == 0).coalesce(2).write.mode("append").parquet(src)
+        _await_or_fail(lattice.start_maintenance_stream(
+            spark, family, src, state, ckpt, max_files_per_trigger=2
+        ))
+        lattice.compact_state(spark, family, state)
+    return lattice.read_state(spark, family, state)
+
+
 def _pid_alive(pid: int) -> bool:
     import os
 
@@ -110,7 +137,7 @@ def _pid_alive(pid: int) -> bool:
 def sweep_stale_stream_temp_roots(
     min_age_sec: float = 3600.0, hard_ttl_sec: float = 7 * 86400.0
 ) -> None:
-    """Best-effort removal of known-prefix roots left by PRIOR processes
+    """Best-effort removal of stream temp roots left by PRIOR processes
     (a crashed bench/driver run can strand its dirs under /tmp).
 
     pid liveness alone is not trustworthy: pids are recycled, and
@@ -120,8 +147,7 @@ def sweep_stale_stream_temp_roots(
     ``min_age_sec`` (a recycled-dead pid can't strand a fresh live run's
     dirs — those are younger than an hour), and removed UNCONDITIONALLY
     once older than ``hard_ttl_sec`` (a recycled-alive pid held by an
-    unrelated long-lived daemon can't pin a stranded root forever).
-    Legacy roots without a pid marker use the ``min_age_sec`` bar."""
+    unrelated long-lived daemon can't pin a stranded root forever)."""
     import glob
     import os
     import re
@@ -129,21 +155,20 @@ def sweep_stale_stream_temp_roots(
     import tempfile
     import time
 
-    tmp = tempfile.gettempdir()
     now = time.time()
-    for prefix in STREAM_TEMP_PREFIXES:
-        for path in glob.glob(os.path.join(tmp, prefix + "*")):
-            try:
-                age = now - os.path.getmtime(path)
-            except OSError:
-                continue
-            m = re.match(re.escape(prefix) + r"pid(\d+)_", os.path.basename(path))
-            if m and age < hard_ttl_sec:
-                if _pid_alive(int(m.group(1))) or age < min_age_sec:
-                    continue
-            elif not m and age < min_age_sec:
-                continue
-            shutil.rmtree(path, ignore_errors=True)
+    pattern = os.path.join(tempfile.gettempdir(), f"{_STREAM_TEMP_PREFIX}pid*_*")
+    for path in glob.glob(pattern):
+        try:
+            age = now - os.path.getmtime(path)
+        except OSError:
+            continue
+        name = os.path.basename(path)
+        m = re.match(re.escape(_STREAM_TEMP_PREFIX) + r"pid(\d+)_", name)
+        if m is None:
+            continue
+        if age < hard_ttl_sec and (_pid_alive(int(m.group(1))) or age < min_age_sec):
+            continue
+        shutil.rmtree(path, ignore_errors=True)
 
 
 @register(
@@ -857,7 +882,7 @@ def q_streaming_rollup_day_grain(spark: SparkSession, sf_dir: str) -> DataFrame:
         start_rollup_maintenance_stream,
     )
 
-    base = _stream_temp_root("roll_day_")
+    base = _stream_temp_root()
     src = os.path.join(base, "in")
     rollup = os.path.join(base, "hour")
     derived = os.path.join(base, "dm")
@@ -951,38 +976,13 @@ def _surv_stream_oracle() -> str:
     "the driver alongside the sum-lattice rollup chain.",
 )
 def q_streaming_survivorship_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
+    from ..streaming.survivorship_maintenance import SURVIVORSHIP
 
-    from ..streaming.survivorship_maintenance import (
-        SURV_EVENTS_SCHEMA,
-        compact_survivorship_state,
-        read_survivorship_state,
-        start_survivorship_stream,
-    )
-
-    base = _stream_temp_root("surv_stream_")
-    src = os.path.join(base, "in")
-    state = os.path.join(base, "state")
-    ckpt = os.path.join(base, "ckpt")
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
-    # first tranche: ~3/4 of the corpus over several files -> several
-    # foreachBatch partials under maxFilesPerTrigger
-    ev.filter(F.col("event_id") % 4 != 0).coalesce(4).write.mode("append").parquet(src)
-    with _data_sized_width(spark, src):
-        q = start_survivorship_stream(spark, src, state, ckpt, max_files_per_trigger=2)
-        _await_or_fail(q)
-        # late tranche lands after the stream stopped; the SAME checkpoint
-        # resumes and absorbs only the new files (restart certification)
-        ev.filter(F.col("event_id") % 4 == 0).coalesce(2).write.mode("append").parquet(src)
-        q = start_survivorship_stream(spark, src, state, ckpt, max_files_per_trigger=2)
-        _await_or_fail(q)
-        # fold every batch partial into one partition, then read (reading
-        # is merging — after compaction the merge is over one partition)
-        compact_survivorship_state(spark, state)
     return (
-        read_survivorship_state(spark, state)
+        _lattice_guard(spark, SURVIVORSHIP, ev, "event_id")
         .select(
             "user_id",
             F.col("golden_k").cast("long").alias("golden_k"),
@@ -1032,32 +1032,11 @@ def _cms_stream_oracle() -> str:
     "certification.",
 )
 def q_streaming_cms_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
+    from ..streaming.sketch_maintenance import CMS
 
-    from ..streaming.sketch_maintenance import (
-        compact_cms_state,
-        read_cms_state,
-        start_cms_maintenance_stream,
-    )
-
-    base = _stream_temp_root("cms_stream_")
-    src = os.path.join(base, "in")
-    state = os.path.join(base, "state")
-    ckpt = os.path.join(base, "ckpt")
     d = load_table(spark, "documents", sf_dir).select("doc_id", "text", "source")
-    # first tranche over several files -> several bounded partials
-    d.filter(F.col("doc_id") % 4 != 0).coalesce(4).write.mode("append").parquet(src)
-    with _data_sized_width(spark, src):
-        q = start_cms_maintenance_stream(spark, src, state, ckpt, max_files_per_trigger=2)
-        _await_or_fail(q)
-        # late tranche after the stream stopped; SAME checkpoint resumes
-        d.filter(F.col("doc_id") % 4 == 0).coalesce(2).write.mode("append").parquet(src)
-        q = start_cms_maintenance_stream(spark, src, state, ckpt, max_files_per_trigger=2)
-        _await_or_fail(q)
-        # fold the partials into one committed generation, then read
-        compact_cms_state(spark, state)
     return (
-        read_cms_state(spark, state)
+        _lattice_guard(spark, CMS, d, "doc_id")
         .select(
             F.col("row_j").cast("int").alias("row_j"),
             F.col("cell").cast("long").alias("cell"),
@@ -1109,29 +1088,11 @@ def _logbin_stream_oracle() -> str:
     "histogram a quantile read-off would consume.",
 )
 def q_streaming_logbin_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
+    from ..streaming.sketch_maintenance import LOGBIN
 
-    from ..streaming.sketch_maintenance import (
-        compact_logbin_state,
-        read_logbin_state,
-        start_logbin_maintenance_stream,
-    )
-
-    base = _stream_temp_root("logbin_stream_")
-    src = os.path.join(base, "in")
-    state = os.path.join(base, "state")
-    ckpt = os.path.join(base, "ckpt")
     o = load_table(spark, "orders", sf_dir).select("o_orderkey", "o_totalprice")
-    o.filter(F.col("o_orderkey") % 4 != 0).coalesce(4).write.mode("append").parquet(src)
-    with _data_sized_width(spark, src):
-        q = start_logbin_maintenance_stream(spark, src, state, ckpt, max_files_per_trigger=2)
-        _await_or_fail(q)
-        o.filter(F.col("o_orderkey") % 4 == 0).coalesce(2).write.mode("append").parquet(src)
-        q = start_logbin_maintenance_stream(spark, src, state, ckpt, max_files_per_trigger=2)
-        _await_or_fail(q)
-        compact_logbin_state(spark, state)
     return (
-        read_logbin_state(spark, state)
+        _lattice_guard(spark, LOGBIN, o, "o_orderkey")
         .select(
             F.col("shift").cast("int").alias("shift"),
             F.col("bkey").cast("long").alias("bkey"),
@@ -1175,36 +1136,15 @@ def _psamp_stream_oracle() -> str:
     "(K+1 rows of state per batch), never recomputed.",
 )
 def q_streaming_priority_sample_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     from ..operators.selection import price_sample
-    from ..streaming.sample_maintenance import (
-        compact_sample_state,
-        read_sample_state,
-        start_sample_maintenance_stream,
-    )
+    from ..streaming.sample_maintenance import SAMPLE
 
-    base = _stream_temp_root("psamp_stream_")
-    src = os.path.join(base, "in")
-    state = os.path.join(base, "state")
-    ckpt = os.path.join(base, "ckpt")
     d = load_table(spark, "documents", sf_dir).select(
         "doc_id", "source", F.col("n_chars").cast("long").alias("n_chars")
     )
-    # first tranche: ~3/4 of the corpus over several files -> several
-    # bounded top-(K+1) partials under maxFilesPerTrigger
-    d.filter(F.col("doc_id") % 4 != 0).coalesce(4).write.mode("append").parquet(src)
-    with _data_sized_width(spark, src):
-        q = start_sample_maintenance_stream(spark, src, state, ckpt, max_files_per_trigger=2)
-        _await_or_fail(q)
-        # late tranche after the stream stopped; SAME checkpoint resumes
-        d.filter(F.col("doc_id") % 4 == 0).coalesce(2).write.mode("append").parquet(src)
-        q = start_sample_maintenance_stream(spark, src, state, ckpt, max_files_per_trigger=2)
-        _await_or_fail(q)
-        # fold the partials into one K+1-row partition, then price the
-        # sample with the SAME shared pricing block the batch kernel uses
-        compact_sample_state(spark, state)
-    return price_sample(read_sample_state(spark, state)).select(
+    # price the folded K+1-row sample with the SAME shared pricing block
+    # the batch kernel uses
+    return price_sample(_lattice_guard(spark, SAMPLE, d, "doc_id")).select(
         "doc_id", "source", "w", "pri", "rk", "tau", "est_mass"
     ).orderBy("rk")
 
@@ -1247,30 +1187,11 @@ def _kmv_stream_oracle() -> str:
     "anywhere (the CRDT property the module header names).",
 )
 def q_streaming_kmv_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
+    from ..streaming.sketch_maintenance import KMV
 
-    from ..streaming.sketch_maintenance import (
-        compact_kmv_state,
-        read_kmv_state,
-        start_sketch_maintenance_stream,
-    )
-
-    base = _stream_temp_root("kmv_stream_")
-    src = os.path.join(base, "in")
-    state = os.path.join(base, "state")
-    ckpt = os.path.join(base, "ckpt")
     d = load_table(spark, "documents", sf_dir).select("doc_id", "text", "source")
-    d.filter(F.col("doc_id") % 4 != 0).coalesce(4).write.mode("append").parquet(src)
-    with _data_sized_width(spark, src):
-        q = start_sketch_maintenance_stream(spark, src, state, ckpt, max_files_per_trigger=2)
-        _await_or_fail(q)
-        # late tranche after the stream stopped; SAME checkpoint resumes
-        d.filter(F.col("doc_id") % 4 == 0).coalesce(2).write.mode("append").parquet(src)
-        q = start_sketch_maintenance_stream(spark, src, state, ckpt, max_files_per_trigger=2)
-        _await_or_fail(q)
-        compact_kmv_state(spark, state)
     return (
-        read_kmv_state(spark, state)
+        _lattice_guard(spark, KMV, d, "doc_id")
         .select("source", F.posexplode("kmin").alias("pos", "h"))
         .select(
             "source",
@@ -1316,30 +1237,11 @@ def _hll_stream_oracle() -> str:
     "recomputed from the stream.",
 )
 def q_streaming_hll_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
+    from ..streaming.sketch_maintenance import HLL
 
-    from ..streaming.sketch_maintenance import (
-        compact_hll_state,
-        read_hll_state,
-        start_hll_maintenance_stream,
-    )
-
-    base = _stream_temp_root("hll_stream_")
-    src = os.path.join(base, "in")
-    state = os.path.join(base, "state")
-    ckpt = os.path.join(base, "ckpt")
     d = load_table(spark, "documents", sf_dir).select("doc_id", "text", "source")
-    d.filter(F.col("doc_id") % 4 != 0).coalesce(4).write.mode("append").parquet(src)
-    with _data_sized_width(spark, src):
-        q = start_hll_maintenance_stream(spark, src, state, ckpt, max_files_per_trigger=2)
-        _await_or_fail(q)
-        # late tranche after the stream stopped; SAME checkpoint resumes
-        d.filter(F.col("doc_id") % 4 == 0).coalesce(2).write.mode("append").parquet(src)
-        q = start_hll_maintenance_stream(spark, src, state, ckpt, max_files_per_trigger=2)
-        _await_or_fail(q)
-        compact_hll_state(spark, state)
     return (
-        read_hll_state(spark, state)
+        _lattice_guard(spark, HLL, d, "doc_id")
         .select(
             "source",
             F.col("reg").cast("long").alias("reg"),
@@ -1385,30 +1287,11 @@ def _bloom_stream_oracle() -> str:
     "table.",
 )
 def q_streaming_bloom_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
+    from ..streaming.sketch_maintenance import BLOOM
 
-    from ..streaming.sketch_maintenance import (
-        compact_bloom_state,
-        read_bloom_state,
-        start_bloom_maintenance_stream,
-    )
-
-    base = _stream_temp_root("bloom_stream_")
-    src = os.path.join(base, "in")
-    state = os.path.join(base, "state")
-    ckpt = os.path.join(base, "ckpt")
     o = load_table(spark, "orders", sf_dir).select("o_orderkey", "o_orderpriority")
-    o.filter(F.col("o_orderkey") % 4 != 0).coalesce(4).write.mode("append").parquet(src)
-    with _data_sized_width(spark, src):
-        q = start_bloom_maintenance_stream(spark, src, state, ckpt, max_files_per_trigger=2)
-        _await_or_fail(q)
-        # late tranche after the stream stopped; SAME checkpoint resumes
-        o.filter(F.col("o_orderkey") % 4 == 0).coalesce(2).write.mode("append").parquet(src)
-        q = start_bloom_maintenance_stream(spark, src, state, ckpt, max_files_per_trigger=2)
-        _await_or_fail(q)
-        compact_bloom_state(spark, state)
     return (
-        read_bloom_state(spark, state)
+        _lattice_guard(spark, BLOOM, o, "o_orderkey")
         .select(
             F.col("word").cast("long").alias("word"),
             F.col("bits").cast("long").alias("bits"),
@@ -1561,8 +1444,9 @@ def q_watermark_lateness_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="The streaming MIN/MAX-extrema lattice, driver-gated at value "
     "level — the NINTH certified lattice family, and the proof that "
     "streaming/lattice.py's protocol extraction holds: the family is a "
-    "~40-line declaration (streaming/profile_maintenance.py) — a one-"
-    "row-per-source batch partial and a min/max fold — inheriting "
+    "single declaration (the PROFILE constant in "
+    "streaming/profile_maintenance.py) — a one-row-per-source batch "
+    "partial and a min/max fold — inheriting "
     "replay repair, reading-is-merging, restart, and sweep compaction "
     "from the shared module. Documents are fed through the ACTUAL "
     "maintenance stream in two availableNow runs against ONE "
@@ -1576,33 +1460,10 @@ def q_watermark_lateness_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     "scans the lake.",
 )
 def q_streaming_profile_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
+    from ..streaming.profile_maintenance import PROFILE
 
-    from ..streaming.profile_maintenance import (
-        compact_profile_state,
-        read_profile_state,
-        start_profile_maintenance_stream,
-    )
-
-    base = _stream_temp_root("profile_stream_")
-    src = os.path.join(base, "in")
-    state = os.path.join(base, "state")
-    ckpt = os.path.join(base, "ckpt")
     d = load_table(spark, "documents", sf_dir).select("doc_id", "text", "source")
-    d.filter(F.col("doc_id") % 4 != 0).coalesce(4).write.mode("append").parquet(src)
-    with _data_sized_width(spark, src):
-        q = start_profile_maintenance_stream(
-            spark, src, state, ckpt, max_files_per_trigger=2
-        )
-        _await_or_fail(q)
-        # late tranche after the stream stopped; SAME checkpoint resumes
-        d.filter(F.col("doc_id") % 4 == 0).coalesce(2).write.mode("append").parquet(src)
-        q = start_profile_maintenance_stream(
-            spark, src, state, ckpt, max_files_per_trigger=2
-        )
-        _await_or_fail(q)
-        compact_profile_state(spark, state)
-    return read_profile_state(spark, state).orderBy("source")
+    return _lattice_guard(spark, PROFILE, d, "doc_id").orderBy("source")
 
 
 # --- the tenth lattice family: streaming top-k heavy hitters ------------------
@@ -1647,33 +1508,10 @@ def q_streaming_profile_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     "O(batches x 65 rows), never vocabulary-sized.",
 )
 def q_streaming_topk_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
+    from ..streaming.topk_maintenance import TOPK
 
-    from ..streaming.topk_maintenance import (
-        compact_topk_state,
-        read_topk_state,
-        start_topk_maintenance_stream,
-    )
-
-    base = _stream_temp_root("topk_stream_")
-    src = os.path.join(base, "in")
-    state = os.path.join(base, "state")
-    ckpt = os.path.join(base, "ckpt")
     d = load_table(spark, "documents", sf_dir).select("doc_id", "text", "source")
-    d.filter(F.col("doc_id") % 4 != 0).coalesce(4).write.mode("append").parquet(src)
-    with _data_sized_width(spark, src):
-        q = start_topk_maintenance_stream(
-            spark, src, state, ckpt, max_files_per_trigger=2
-        )
-        _await_or_fail(q)
-        # late tranche after the stream stopped; SAME checkpoint resumes
-        d.filter(F.col("doc_id") % 4 == 0).coalesce(2).write.mode("append").parquet(src)
-        q = start_topk_maintenance_stream(
-            spark, src, state, ckpt, max_files_per_trigger=2
-        )
-        _await_or_fail(q)
-        compact_topk_state(spark, state)
-    return read_topk_state(spark, state).orderBy("rk")
+    return _lattice_guard(spark, TOPK, d, "doc_id").orderBy("rk")
 
 
 # --- the eleventh lattice family: streaming LSH bucket-index maintenance ------
@@ -1713,30 +1551,7 @@ def _lshindex_stream_oracle() -> str:
     "maintenance cost: O(|batch| x 8) rows, never a corpus rescan.",
 )
 def q_streaming_lsh_index_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
+    from ..streaming.lshindex_maintenance import LSHINDEX
 
-    from ..streaming.lshindex_maintenance import (
-        compact_lshindex_state,
-        read_lshindex_state,
-        start_lshindex_maintenance_stream,
-    )
-
-    base = _stream_temp_root("lshidx_stream_")
-    src = os.path.join(base, "in")
-    state = os.path.join(base, "state")
-    ckpt = os.path.join(base, "ckpt")
     e = load_table(spark, "embeddings", sf_dir).select("vec_id", "embedding", "label")
-    e.filter(F.col("vec_id") % 4 != 0).coalesce(4).write.mode("append").parquet(src)
-    with _data_sized_width(spark, src):
-        q = start_lshindex_maintenance_stream(
-            spark, src, state, ckpt, max_files_per_trigger=2
-        )
-        _await_or_fail(q)
-        # late tranche after the stream stopped; SAME checkpoint resumes
-        e.filter(F.col("vec_id") % 4 == 0).coalesce(2).write.mode("append").parquet(src)
-        q = start_lshindex_maintenance_stream(
-            spark, src, state, ckpt, max_files_per_trigger=2
-        )
-        _await_or_fail(q)
-        compact_lshindex_state(spark, state)
-    return read_lshindex_state(spark, state).orderBy("vec_id", "t")
+    return _lattice_guard(spark, LSHINDEX, e, "vec_id").orderBy("vec_id", "t")

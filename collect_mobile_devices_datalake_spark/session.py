@@ -12,8 +12,6 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from . import TABLES
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
@@ -108,16 +106,6 @@ def fan_out(df: DataFrame, *keys: str) -> DataFrame:
     return df.repartition(target, *cols) if cols else df.repartition(target)
 
 
-def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    """Load every driver table and register each as a temp view."""
-    out: dict[str, DataFrame] = {}
-    for name in TABLES:
-        df = load_table(spark, name, sf_dir)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out
-
-
 def table_fingerprint(sf_dir: str, table: str) -> str:
     """Cheap content fingerprint of one source table: sorted
     (relpath, size, mtime_ns, tail-bytes) over every file under
@@ -165,10 +153,6 @@ def table_fingerprint(sf_dir: str, table: str) -> str:
 
 from contextlib import contextmanager  # noqa: E402
 
-# r15: scoped_shuffle_width disables AQE when the scoped width fits the
-# executor parallelism (module-level so perf harnesses can A/B it).
-SCOPED_AQE_OFF = True
-
 
 @contextmanager
 def scoped_shuffle_width(
@@ -206,7 +190,7 @@ def scoped_shuffle_width(
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    if aqe_off and SCOPED_AQE_OFF and parts == 1:
+    if aqe_off and parts == 1:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         yield parts

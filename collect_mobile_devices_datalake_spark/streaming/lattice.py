@@ -48,11 +48,15 @@ Protocol invariants, stated once:
   semantics of any counting sketch (dedup upstream or use a G-set
   family when that matters).
 
-A new family is a ``LatticeFamily`` declaration: name the checkpoint
-subdir, give the batch→partial projection and the fold, pick the
-lattice class. Everything else — stream wiring, live-partition
-enumeration (Hadoop FileSystem API, so HDFS/S3 roots behave like local
-disk), crash-safe compaction, replay repair — is this module.
+A family is ONE module-level ``LatticeFamily`` constant (``KMV``,
+``CMS``, ``PROFILE``, ...): name the checkpoint subdir, give the
+batch→partial projection and the fold, pick the lattice class. Callers
+pass that constant straight to the four functions below —
+``start_maintenance_stream``, ``maintain_batch``, ``compact_state`` and
+``read_state`` — with no per-family wrappers. Everything else — stream
+wiring, live-partition enumeration (Hadoop FileSystem API, so HDFS/S3
+roots behave like local disk), crash-safe compaction, replay repair — is
+this module.
 """
 
 from __future__ import annotations

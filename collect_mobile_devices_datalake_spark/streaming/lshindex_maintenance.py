@@ -29,12 +29,10 @@ x N_TABLES) rows, never a corpus rescan).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.similarity import PLANES_PER_TABLE, _multitable_buckets
-from . import lattice
 from .lattice import LatticeFamily
 
 EMB_SCHEMA = "vec_id bigint, embedding array<float>, label int"
@@ -55,34 +53,12 @@ def lshindex_partial(batch: DataFrame) -> DataFrame:
     )
 
 
-def _lshindex_family() -> LatticeFamily:
-    return LatticeFamily(
-        name="lshidx",
-        source_schema=EMB_SCHEMA,
-        partial_fn=lshindex_partial,
-        fold_fn=lambda u: u.distinct(),  # G-set: re-delivery is absorbed
-        empty_schema=_STATE_SCHEMA,
-    )
-
-
-def read_lshindex_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """(vec_id, t, bucket): the live index — the same relation
-    ``operators.similarity.bucket_index`` persists batch-side."""
-    return lattice.read_state(spark, _lshindex_family(), state_dir)
-
-
-def compact_lshindex_state(spark: SparkSession, state_dir: str) -> None:
-    lattice.compact_state(spark, _lshindex_family(), state_dir)
-
-
-def start_lshindex_maintenance_stream(
-    spark: SparkSession,
-    emb_dir: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 10,
-) -> StreamingQuery:
-    return lattice.start_maintenance_stream(
-        spark, _lshindex_family(), emb_dir, state_dir, checkpoint_dir,
-        max_files_per_trigger,
-    )
+# (vec_id, t, bucket): the live index — the same relation
+# ``operators.similarity.bucket_index`` persists batch-side
+LSHINDEX = LatticeFamily(
+    name="lshidx",
+    source_schema=EMB_SCHEMA,
+    partial_fn=lshindex_partial,
+    fold_fn=lambda u: u.distinct(),  # G-set: re-delivery is absorbed
+    empty_schema=_STATE_SCHEMA,
+)

@@ -12,7 +12,6 @@ upsert make it effectively-once).
 
 from __future__ import annotations
 
-import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,18 +24,6 @@ EVENTS_SCHEMA = (
 )
 
 PAGES_SCHEMA = "url string, source string, status int, html string"
-
-
-def _parquet_exists(path: str) -> bool:
-    """True when ``path`` holds at least one committed parquet part file.
-
-    Local-FS check is sufficient here (the lake root is a directory path);
-    on a cluster store the same gate is the catalog / _SUCCESS marker.
-    An empty directory (failed first write) counts as absent.
-    """
-    if not os.path.isdir(path):
-        return False
-    return any(n.endswith(".parquet") for n in os.listdir(path))
 
 
 def _upsert_batch(lake_dir: str, source: str) -> Callable[[DataFrame, int], None]:

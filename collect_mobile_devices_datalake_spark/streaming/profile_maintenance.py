@@ -19,21 +19,12 @@ the lake — the streaming counterpart of a catalog's column statistics.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
-from . import lattice
 from .lattice import LatticeFamily
 
 DOCS_SCHEMA = "doc_id bigint, text string, source string"
-
-_PROFILE_AGGS = [
-    F.min("min_doc_id").alias("min_doc_id"),
-    F.max("max_doc_id").alias("max_doc_id"),
-    F.min("min_chars").alias("min_chars"),
-    F.max("max_chars").alias("max_chars"),
-]
 
 
 def profile_partial(batch: DataFrame) -> DataFrame:
@@ -46,36 +37,24 @@ def profile_partial(batch: DataFrame) -> DataFrame:
     )
 
 
-def _profile_family() -> LatticeFamily:
-    return LatticeFamily(
-        name="profile",
-        source_schema=DOCS_SCHEMA,
-        partial_fn=profile_partial,
-        fold_fn=lambda u: u.groupBy("source").agg(*_PROFILE_AGGS),
-        empty_schema=(
-            "source string, min_doc_id bigint, max_doc_id bigint, "
-            "min_chars bigint, max_chars bigint"
-        ),
+def profile_fold(u: DataFrame) -> DataFrame:
+    """Per-source min/max over every partial."""
+    return u.groupBy("source").agg(
+        F.min("min_doc_id").alias("min_doc_id"),
+        F.max("max_doc_id").alias("max_doc_id"),
+        F.min("min_chars").alias("min_chars"),
+        F.max("max_chars").alias("max_chars"),
     )
 
 
-def read_profile_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """(source, min/max doc_id, min/max chars): fold of every partial."""
-    return lattice.read_state(spark, _profile_family(), state_dir)
-
-
-def compact_profile_state(spark: SparkSession, state_dir: str) -> None:
-    lattice.compact_state(spark, _profile_family(), state_dir)
-
-
-def start_profile_maintenance_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 10,
-) -> StreamingQuery:
-    return lattice.start_maintenance_stream(
-        spark, _profile_family(), docs_dir, state_dir, checkpoint_dir,
-        max_files_per_trigger,
-    )
+# (source, min/max doc_id, min/max chars): fold of every partial
+PROFILE = LatticeFamily(
+    name="profile",
+    source_schema=DOCS_SCHEMA,
+    partial_fn=profile_partial,
+    fold_fn=profile_fold,
+    empty_schema=(
+        "source string, min_doc_id bigint, max_doc_id bigint, "
+        "min_chars bigint, max_chars bigint"
+    ),
+)

@@ -22,12 +22,10 @@ O((K+1) * batches-since-compaction) rows, independent of corpus size.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.selection import _PRI_K, _PRI_MOD, _PRI_U_SQL
-from . import lattice
 from .lattice import LatticeFamily
 
 DOCS_SCHEMA = "doc_id bigint, source string, n_chars bigint"
@@ -55,46 +53,18 @@ def priority_partial(batch: DataFrame) -> DataFrame:
     return _scored(batch).orderBy(F.desc("pri"), "doc_id").limit(_PRI_K + 1)
 
 
-def _sample_family() -> LatticeFamily:
-    return LatticeFamily(
-        name="psamp",
-        source_schema=DOCS_SCHEMA,
-        partial_fn=priority_partial,
-        fold_fn=lambda u: (
-            u.dropDuplicates(["doc_id"])
-            .orderBy(F.desc("pri"), "doc_id")
-            .limit(_PRI_K + 1)
-        ),
-        empty_schema=_STATE_SCHEMA,
-    )
-
-
-def _maintain_sample_batch(state_dir: str):
-    return lattice.maintain_batch(_sample_family(), state_dir)
-
-
-def read_sample_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The current global top-(K+1): fold of every batch partial —
-    union, dedup by doc_id (priorities are pure functions of the row,
-    so duplicates are identical), re-rank, cut."""
-    return lattice.read_state(spark, _sample_family(), state_dir)
-
-
-def compact_sample_state(spark: SparkSession, state_dir: str) -> None:
-    """Fold all partials into one K+1-row partition (idempotent sweep)."""
-    lattice.compact_state(spark, _sample_family(), state_dir)
-
-
-def start_sample_maintenance_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 10,
-) -> StreamingQuery:
-    """Streaming weighted sampling: the live counterpart of
-    priority_sample_topk."""
-    return lattice.start_maintenance_stream(
-        spark, _sample_family(), docs_dir, state_dir, checkpoint_dir,
-        max_files_per_trigger,
-    )
+# The current global top-(K+1): streaming weighted sampling, the live
+# counterpart of priority_sample_topk. The fold is union, dedup by doc_id
+# (priorities are pure functions of the row, so duplicates are
+# identical), re-rank, cut; compaction leaves one K+1-row partition.
+SAMPLE = LatticeFamily(
+    name="psamp",
+    source_schema=DOCS_SCHEMA,
+    partial_fn=priority_partial,
+    fold_fn=lambda u: (
+        u.dropDuplicates(["doc_id"])
+        .orderBy(F.desc("pri"), "doc_id")
+        .limit(_PRI_K + 1)
+    ),
+    empty_schema=_STATE_SCHEMA,
+)

@@ -25,12 +25,10 @@ batch partials keep comparing correctly — expressed as the family's
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.advanced import survivorship_keyed
-from . import lattice
 from .lattice import LatticeFamily
 
 SURV_EVENTS_SCHEMA = (
@@ -64,51 +62,22 @@ def _golden_aggs() -> list:
     ]
 
 
-def _surv_family() -> LatticeFamily:
-    return LatticeFamily(
-        name="surv",
-        source_schema=SURV_EVENTS_SCHEMA,
-        partial_fn=survivorship_partial,
-        # compaction keeps okey (the merge key) for later comparisons...
-        fold_fn=lambda u: u.groupBy("user_id").agg(
-            F.max("okey").alias("okey"), *_golden_aggs()
-        ),
-        # ...the surfaced read drops it
-        read_fold_fn=lambda u: u.groupBy("user_id").agg(*_golden_aggs()),
-        empty_schema=(
-            "user_id bigint, golden_k bigint, golden_event_id bigint, "
-            "golden_type string, n_events bigint, last_ts timestamp"
-        ),
-    )
-
-
-def _maintain_surv_batch(state_dir: str):
-    return lattice.maintain_batch(_surv_family(), state_dir)
-
-
-def read_survivorship_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The current golden records: fold of every batch partial —
-    argmax-by-okey across partials per user; n_events sums."""
-    return lattice.read_state(spark, _surv_family(), state_dir)
-
-
-def compact_survivorship_state(spark: SparkSession, state_dir: str) -> None:
-    """Fold all partials into one partition, keeping okey per user
-    (idempotent sweep for the argmax legs; n_events carries the
-    documented sum caveat)."""
-    lattice.compact_state(spark, _surv_family(), state_dir)
-
-
-def start_survivorship_stream(
-    spark: SparkSession,
-    events_dir: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 10,
-) -> StreamingQuery:
-    """Streaming entity resolution: the live counterpart of
-    golden_record_survivorship."""
-    return lattice.start_maintenance_stream(
-        spark, _surv_family(), events_dir, state_dir, checkpoint_dir,
-        max_files_per_trigger,
-    )
+# The current golden records — streaming entity resolution, the live
+# counterpart of golden_record_survivorship: argmax-by-okey across
+# partials per user, n_events sums (idempotent sweep for the argmax
+# legs; n_events carries the documented sum caveat).
+SURVIVORSHIP = LatticeFamily(
+    name="surv",
+    source_schema=SURV_EVENTS_SCHEMA,
+    partial_fn=survivorship_partial,
+    # compaction keeps okey (the merge key) for later comparisons...
+    fold_fn=lambda u: u.groupBy("user_id").agg(
+        F.max("okey").alias("okey"), *_golden_aggs()
+    ),
+    # ...the surfaced read drops it
+    read_fold_fn=lambda u: u.groupBy("user_id").agg(*_golden_aggs()),
+    empty_schema=(
+        "user_id bigint, golden_k bigint, golden_event_id bigint, "
+        "golden_type string, n_events bigint, last_ts timestamp"
+    ),
+)

@@ -35,13 +35,11 @@ test, which forces c* > 0 and asserts the MG bound item-for-item.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
 from ..functions.text import tokens
-from . import lattice
 from .lattice import LatticeFamily
 
 DOCS_SCHEMA = "doc_id bigint, text string, source string"
@@ -129,53 +127,15 @@ def topk_read_post(state: DataFrame) -> DataFrame:
     )
 
 
-def _topk_family() -> LatticeFamily:
-    return LatticeFamily(
-        name="topk",
-        source_schema=DOCS_SCHEMA,
-        partial_fn=topk_partial,
-        fold_fn=topk_fold,
-        empty_schema=_STATE_SCHEMA,
-        idempotent=False,  # counters SUM: manifest-committed compaction
-        read_post=topk_read_post,
-    )
-
-
-def read_topk_state(spark: SparkSession, state_dir: str) -> DataFrame:
-    """(word, cnt_min, cnt_max, rk): the surfaced heavy hitters."""
-    return lattice.read_state(spark, _topk_family(), state_dir)
-
-
-def read_topk_counters(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The raw folded state (counter + marker rows) — for tests that
-    assert the MG guarantee over EVERY counter, not just the top K_OUT."""
-    fam = _topk_family()
-    return lattice.read_state(
-        spark,
-        LatticeFamily(
-            name=fam.name,
-            source_schema=fam.source_schema,
-            partial_fn=fam.partial_fn,
-            fold_fn=fam.fold_fn,
-            empty_schema=fam.empty_schema,
-            idempotent=fam.idempotent,
-        ),
-        state_dir,
-    )
-
-
-def compact_topk_state(spark: SparkSession, state_dir: str) -> None:
-    lattice.compact_state(spark, _topk_family(), state_dir)
-
-
-def start_topk_maintenance_stream(
-    spark: SparkSession,
-    docs_dir: str,
-    state_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 10,
-) -> StreamingQuery:
-    return lattice.start_maintenance_stream(
-        spark, _topk_family(), docs_dir, state_dir, checkpoint_dir,
-        max_files_per_trigger,
-    )
+# (word, cnt_min, cnt_max, rk): the surfaced heavy hitters. The raw
+# folded state (counter + marker rows) is this family with
+# ``read_post=None``.
+TOPK = LatticeFamily(
+    name="topk",
+    source_schema=DOCS_SCHEMA,
+    partial_fn=topk_partial,
+    fold_fn=topk_fold,
+    empty_schema=_STATE_SCHEMA,
+    idempotent=False,  # counters SUM: manifest-committed compaction
+    read_post=topk_read_post,
+)

@@ -87,12 +87,8 @@ def test_cms_maintenance_stream_matches_batch(spark, tmp_path):
     the manifest (an uncommitted compacted dir stays invisible)."""
     import os
 
-    from collect_mobile_devices_datalake_spark.streaming.sketch_maintenance import (
-        _maintain_cms_batch,
-        compact_cms_state,
-        read_cms_state,
-        start_cms_maintenance_stream,
-    )
+    from collect_mobile_devices_datalake_spark.streaming import lattice
+    from collect_mobile_devices_datalake_spark.streaming.sketch_maintenance import CMS
 
     docs = load_table(spark, "documents", SF_SMOKE).select("doc_id", "text", "source")
     docs_dir = str(tmp_path / "docs_in")
@@ -102,28 +98,28 @@ def test_cms_maintenance_stream_matches_batch(spark, tmp_path):
     first = docs.filter(F.col("doc_id") % 2 == 0)
     second = docs.filter(F.col("doc_id") % 2 == 1)
     first.coalesce(1).write.mode("append").parquet(docs_dir)
-    start_cms_maintenance_stream(spark, docs_dir, sketch_dir, ckpt).awaitTermination(120)
+    lattice.start_maintenance_stream(spark, CMS, docs_dir, sketch_dir, ckpt).awaitTermination(120)
     second.coalesce(1).write.mode("append").parquet(docs_dir)
-    start_cms_maintenance_stream(spark, docs_dir, sketch_dir, ckpt).awaitTermination(120)
+    lattice.start_maintenance_stream(spark, CMS, docs_dir, sketch_dir, ckpt).awaitTermination(120)
 
     want = _state_map(cms_sketch(token_stream(docs)))
-    assert _state_map(read_cms_state(spark, sketch_dir)) == want and len(want) > 0
+    assert _state_map(lattice.read_state(spark, CMS, sketch_dir)) == want and len(want) > 0
 
     # checkpoint replay (same batch id) rewrites wholesale: no drift
-    fn = _maintain_cms_batch(sketch_dir)
+    fn = lattice.maintain_batch(CMS, sketch_dir)
     fn(first, 0)
-    assert _state_map(read_cms_state(spark, sketch_dir)) == want
+    assert _state_map(lattice.read_state(spark, CMS, sketch_dir)) == want
 
     # crash window: a compacted generation WITHOUT a manifest commit is
     # invisible — simulate by writing the c-dir by hand
     cms_sketch(token_stream(docs)).write.mode("overwrite").parquet(
         os.path.join(sketch_dir, "batch=c99")
     )
-    assert _state_map(read_cms_state(spark, sketch_dir)) == want
+    assert _state_map(lattice.read_state(spark, CMS, sketch_dir)) == want
 
     # committed compaction folds to one generation, state unchanged
-    compact_cms_state(spark, sketch_dir)
-    assert _state_map(read_cms_state(spark, sketch_dir)) == want
+    lattice.compact_state(spark, CMS, sketch_dir)
+    assert _state_map(lattice.read_state(spark, CMS, sketch_dir)) == want
     live = [d for d in os.listdir(sketch_dir) if d.startswith("batch=")]
     # absorbed dirs are GC'd; only the committed generation remains
     # (plus the orphan c99, which stays invisible and superseded)
@@ -131,8 +127,8 @@ def test_cms_maintenance_stream_matches_batch(spark, tmp_path):
 
     # post-compaction arrivals keep accumulating on top of the generation
     first.coalesce(1).write.mode("append").parquet(docs_dir)
-    start_cms_maintenance_stream(spark, docs_dir, sketch_dir, ckpt).awaitTermination(120)
-    got = _state_map(read_cms_state(spark, sketch_dir))
+    lattice.start_maintenance_stream(spark, CMS, docs_dir, sketch_dir, ckpt).awaitTermination(120)
+    got = _state_map(lattice.read_state(spark, CMS, sketch_dir))
     want_plus = _state_map(
         cms_sketch(token_stream(docs.unionByName(first)))
     )
@@ -143,27 +139,24 @@ def test_cms_second_compaction_no_double_count(spark, tmp_path):
     """Compacting twice (generation over generation) must not re-absorb
     mass: the sum lattice is not idempotent, so this is THE correctness
     property of the manifest protocol."""
-    from collect_mobile_devices_datalake_spark.streaming.sketch_maintenance import (
-        _maintain_cms_batch,
-        compact_cms_state,
-        read_cms_state,
-    )
+    from collect_mobile_devices_datalake_spark.streaming import lattice
+    from collect_mobile_devices_datalake_spark.streaming.sketch_maintenance import CMS
 
     docs = load_table(spark, "documents", SF_SMOKE).select("doc_id", "text", "source")
     sketch_dir = str(tmp_path / "sketch")
-    fn = _maintain_cms_batch(sketch_dir)
+    fn = lattice.maintain_batch(CMS, sketch_dir)
     fn(docs.filter(F.col("doc_id") % 3 == 0), 0)
     fn(docs.filter(F.col("doc_id") % 3 == 1), 1)
-    want = _state_map(read_cms_state(spark, sketch_dir))
-    compact_cms_state(spark, sketch_dir)
-    assert _state_map(read_cms_state(spark, sketch_dir)) == want
+    want = _state_map(lattice.read_state(spark, CMS, sketch_dir))
+    lattice.compact_state(spark, CMS, sketch_dir)
+    assert _state_map(lattice.read_state(spark, CMS, sketch_dir)) == want
     fn(docs.filter(F.col("doc_id") % 3 == 2), 2)
     want2 = _state_map(cms_sketch(token_stream(docs)))
-    assert _state_map(read_cms_state(spark, sketch_dir)) == want2
-    compact_cms_state(spark, sketch_dir)
-    assert _state_map(read_cms_state(spark, sketch_dir)) == want2
-    compact_cms_state(spark, sketch_dir)  # no-op on a single generation
-    assert _state_map(read_cms_state(spark, sketch_dir)) == want2
+    assert _state_map(lattice.read_state(spark, CMS, sketch_dir)) == want2
+    lattice.compact_state(spark, CMS, sketch_dir)
+    assert _state_map(lattice.read_state(spark, CMS, sketch_dir)) == want2
+    lattice.compact_state(spark, CMS, sketch_dir)  # no-op on a single generation
+    assert _state_map(lattice.read_state(spark, CMS, sketch_dir)) == want2
 
 
 def test_dyadic_width_fold_identity(spark):
@@ -195,13 +188,12 @@ def test_compaction_fails_fast_on_remote_root(spark):
     batch dir live)."""
     import pytest
 
-    from collect_mobile_devices_datalake_spark.streaming.sketch_maintenance import (
-        compact_cms_state,
-    )
+    from collect_mobile_devices_datalake_spark.streaming import lattice
+    from collect_mobile_devices_datalake_spark.streaming.sketch_maintenance import CMS
 
     for root in ("s3a://bucket/sketch", "hdfs://nn:8020/sketch"):
         with pytest.raises(NotImplementedError, match="atomic manifest swap"):
-            compact_cms_state(spark, root)
+            lattice.compact_state(spark, CMS, root)
 
 
 class _MockRenameFS:
@@ -309,25 +301,22 @@ def test_compaction_through_injected_rename_contract_store(spark, tmp_path):
     from collect_mobile_devices_datalake_spark.streaming.fsutil import (
         RenameContractManifestStore,
     )
-    from collect_mobile_devices_datalake_spark.streaming.sketch_maintenance import (
-        _maintain_cms_batch,
-        compact_cms_state,
-        read_cms_state,
-    )
+    from collect_mobile_devices_datalake_spark.streaming import lattice
+    from collect_mobile_devices_datalake_spark.streaming.sketch_maintenance import CMS
 
     fs = _MockRenameFS()
     store = RenameContractManifestStore(fs)
     docs = load_table(spark, "documents", SF_SMOKE).select("doc_id", "text", "source")
     sketch_dir = str(tmp_path / "sketch")
-    fn = _maintain_cms_batch(sketch_dir)
+    fn = lattice.maintain_batch(CMS, sketch_dir)
     fn(docs.filter(F.col("doc_id") % 3 == 0), 0)
     fn(docs.filter(F.col("doc_id") % 3 == 1), 1)
-    want = _state_map(read_cms_state(spark, sketch_dir))
-    compact_cms_state(spark, sketch_dir, store=store)
-    assert _state_map(read_cms_state(spark, sketch_dir)) == want
+    want = _state_map(lattice.read_state(spark, CMS, sketch_dir))
+    lattice.compact_state(spark, CMS, sketch_dir, store=store)
+    assert _state_map(lattice.read_state(spark, CMS, sketch_dir)) == want
     fn(docs.filter(F.col("doc_id") % 3 == 2), 2)
-    compact_cms_state(spark, sketch_dir, store=store)
-    assert _state_map(read_cms_state(spark, sketch_dir)) == _state_map(
+    lattice.compact_state(spark, CMS, sketch_dir, store=store)
+    assert _state_map(lattice.read_state(spark, CMS, sketch_dir)) == _state_map(
         cms_sketch(token_stream(docs))
     )
     # both commits went through the strategy's rename contract

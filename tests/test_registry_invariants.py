@@ -142,3 +142,37 @@ def test_spark_columns_match_oracle_columns(spark):
                 "oracle": oracle_cols,
             }
     assert not offenders, f"spark/oracle column mismatch: {offenders}"
+
+
+def test_every_package_module_imports_without_a_session():
+    """Importing a module must not need a SparkSession: building a Column
+    at import time raises SESSION_OR_CONTEXT_NOT_EXISTS in a process that
+    has not started one yet (a worker, a tool, a fresh test run). Each
+    module is imported in a fresh interpreter that never starts Spark."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    probe = """
+import importlib, json, pkgutil
+import collect_mobile_devices_datalake_spark as P
+names = [P.__name__] + [
+    m.name for m in pkgutil.walk_packages(P.__path__, P.__name__ + ".")
+]
+failed = {}
+for n in names:
+    try:
+        importlib.import_module(n)
+    except Exception as e:
+        failed[n] = f"{type(e).__name__}: {e}"[:300]
+print(json.dumps({"n": len(names), "failed": failed}))
+"""
+    out = subprocess.run(
+        [sys.executable, "-c", probe],
+        capture_output=True, text=True, timeout=300, check=True, cwd=repo,
+    )
+    res = json.loads(out.stdout.strip().splitlines()[-1])
+    assert res["failed"] == {}
+    assert res["n"] > 60

@@ -111,3 +111,58 @@ def test_ann_index_sweep_liveness_rules(tmp_path, monkeypatch):
     S.sweep_stale_ann_indexes(min_age_sec=3600, hard_ttl_sec=2 * 86400)
     assert live.exists()              # alive + under the cap: stays
     assert not live_ancient.exists()  # alive but past 4x hard TTL: goes
+
+
+def test_stream_temp_root_sweep_covers_every_streaming_row(
+    spark, tmp_path, monkeypatch
+):
+    """Every streaming registry row makes its temp root under a name the
+    stale-root sweep recognises: with the owning pid dead and the root
+    aged, the sweep removes it; with the pid alive, the sweep keeps it.
+    Each row is stopped right after it makes its root (before any copy
+    or stream), so the test costs no Spark job."""
+    import os
+    import tempfile
+    import time
+
+    import pytest
+
+    import collect_mobile_devices_datalake_spark.operators.streaming_batch as SB
+    from collect_mobile_devices_datalake_spark.registry import (
+        REGISTRY,
+        _ensure_loaded,
+    )
+
+    class _RootMade(Exception):
+        pass
+
+    real_mkdtemp = tempfile.mkdtemp
+
+    def mkdtemp_then_stop(*args, **kwargs):
+        real_mkdtemp(*args, **kwargs)
+        raise _RootMade
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    _ensure_loaded()
+    rows = sorted(n for n in REGISTRY if n.startswith("streaming_"))
+    assert len(rows) == 11
+    with monkeypatch.context() as m:
+        m.setattr(tempfile, "mkdtemp", mkdtemp_then_stop)
+        for name in rows:
+            with pytest.raises(_RootMade):
+                REGISTRY[name].spark(spark, SF_SMOKE)
+    roots = sorted(os.listdir(tmp_path))
+    assert len(roots) == len(rows)
+
+    old = time.time() - 7200
+    dead = []
+    for name in roots:
+        assert f"pid{os.getpid()}_" in name, name
+        d = tmp_path / name.replace(f"pid{os.getpid()}_", "pid999999999_", 1)
+        d.mkdir()
+        os.utime(tmp_path / name, (old, old))
+        os.utime(d, (old, old))
+        dead.append(d)
+    SB.sweep_stale_stream_temp_roots(min_age_sec=3600)
+    assert [d.name for d in dead if d.exists()] == []  # dead pid + aged: gone
+    assert sorted(os.listdir(tmp_path)) == roots  # live pid: kept

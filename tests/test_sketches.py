@@ -74,11 +74,8 @@ def test_sketch_maintenance_stream_matches_batch(spark, tmp_path):
     import os
 
     from collect_mobile_devices_datalake_spark.session import load_table
-    from collect_mobile_devices_datalake_spark.streaming.sketch_maintenance import (
-        compact_kmv_state,
-        read_kmv_state,
-        start_sketch_maintenance_stream,
-    )
+    from collect_mobile_devices_datalake_spark.streaming import lattice
+    from collect_mobile_devices_datalake_spark.streaming.sketch_maintenance import KMV
 
     docs = load_table(spark, "documents", SF_SMOKE).select("doc_id", "text", "source")
     docs_dir = str(tmp_path / "docs_in")
@@ -88,36 +85,36 @@ def test_sketch_maintenance_stream_matches_batch(spark, tmp_path):
     first = docs.filter(F.col("doc_id") % 2 == 0)
     second = docs.filter(F.col("doc_id") % 2 == 1)
     first.coalesce(1).write.mode("append").parquet(docs_dir)
-    start_sketch_maintenance_stream(spark, docs_dir, sketch_dir, ckpt).awaitTermination(120)
+    lattice.start_maintenance_stream(spark, KMV, docs_dir, sketch_dir, ckpt).awaitTermination(120)
 
     second.coalesce(1).write.mode("append").parquet(docs_dir)
-    start_sketch_maintenance_stream(spark, docs_dir, sketch_dir, ckpt).awaitTermination(120)
+    lattice.start_maintenance_stream(spark, KMV, docs_dir, sketch_dir, ckpt).awaitTermination(120)
 
     want = _sketch_map(kmv_sketches(_source_token_hashes(spark, SF_SMOKE)))
     got = {
         r["source"]: tuple(r["kmin"])
-        for r in read_kmv_state(spark, sketch_dir).collect()
+        for r in lattice.read_state(spark, KMV, sketch_dir).collect()
     }
     assert got == want and len(got) > 0
 
     # wholesale re-delivery of the first half under new file names: the
     # idempotent merge absorbs it with zero state change
     first.coalesce(1).write.mode("append").parquet(docs_dir)
-    start_sketch_maintenance_stream(spark, docs_dir, sketch_dir, ckpt).awaitTermination(120)
+    lattice.start_maintenance_stream(spark, KMV, docs_dir, sketch_dir, ckpt).awaitTermination(120)
     assert {
         r["source"]: tuple(r["kmin"])
-        for r in read_kmv_state(spark, sketch_dir).collect()
+        for r in lattice.read_state(spark, KMV, sketch_dir).collect()
     } == want
     assert len([d for d in os.listdir(sketch_dir) if d.startswith("batch=")]) >= 3
 
     # compaction folds the partials into one partition, state unchanged
-    compact_kmv_state(spark, sketch_dir)
+    lattice.compact_state(spark, KMV, sketch_dir)
     assert [d for d in os.listdir(sketch_dir) if d.startswith("batch=")] == [
         "batch=compacted"
     ]
     assert {
         r["source"]: tuple(r["kmin"])
-        for r in read_kmv_state(spark, sketch_dir).collect()
+        for r in lattice.read_state(spark, KMV, sketch_dir).collect()
     } == want
 
 
@@ -125,22 +122,20 @@ def test_sketch_maintenance_replay_repairs_partial_commit(spark, tmp_path):
     """Checkpoint replay of a batch rewrites its partition wholesale —
     a corrupted/partial batch partition heals on re-run."""
     from collect_mobile_devices_datalake_spark.session import load_table
-    from collect_mobile_devices_datalake_spark.streaming.sketch_maintenance import (
-        _maintain_batch,
-        read_kmv_state,
-    )
+    from collect_mobile_devices_datalake_spark.streaming import lattice
+    from collect_mobile_devices_datalake_spark.streaming.sketch_maintenance import KMV
 
     docs = load_table(spark, "documents", SF_SMOKE).select("doc_id", "text", "source")
     sketch_dir = str(tmp_path / "sketch")
-    fn = _maintain_batch(sketch_dir)
+    fn = lattice.maintain_batch(KMV, sketch_dir)
     fn(docs, 0)
-    want = {r["source"]: tuple(r["kmin"]) for r in read_kmv_state(spark, sketch_dir).collect()}
+    want = {r["source"]: tuple(r["kmin"]) for r in lattice.read_state(spark, KMV, sketch_dir).collect()}
 
     # simulate a partial commit: clobber batch 0 with a half-size batch
     fn(docs.filter(F.col("doc_id") % 3 == 0), 0)
     # replay of batch 0 repairs it
     fn(docs, 0)
-    got = {r["source"]: tuple(r["kmin"]) for r in read_kmv_state(spark, sketch_dir).collect()}
+    got = {r["source"]: tuple(r["kmin"]) for r in lattice.read_state(spark, KMV, sketch_dir).collect()}
     assert got == want
 
 
@@ -151,10 +146,10 @@ def test_dau_maintenance_stream_matches_batch_query(spark, tmp_path):
         kmv_kmin,
     )
     from collect_mobile_devices_datalake_spark.session import load_table
+    from collect_mobile_devices_datalake_spark.streaming import lattice
     from collect_mobile_devices_datalake_spark.streaming.sketch_maintenance import (
+        DAU,
         dau_pairs,
-        read_kmv_state,
-        start_dau_maintenance_stream,
     )
 
     events = load_table(spark, "events", SF_SMOKE).select("event_id", "ts", "user_id")
@@ -163,9 +158,9 @@ def test_dau_maintenance_stream_matches_batch_query(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     events.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(ev_dir)
-    start_dau_maintenance_stream(spark, ev_dir, sk_dir, ckpt).awaitTermination(120)
+    lattice.start_maintenance_stream(spark, DAU, ev_dir, sk_dir, ckpt).awaitTermination(120)
     events.filter(F.col("event_id") % 2 == 1).coalesce(1).write.mode("append").parquet(ev_dir)
-    start_dau_maintenance_stream(spark, ev_dir, sk_dir, ckpt).awaitTermination(120)
+    lattice.start_maintenance_stream(spark, DAU, ev_dir, sk_dir, ckpt).awaitTermination(120)
 
     want = {
         r["day"]: tuple(r["kmin"])
@@ -173,16 +168,16 @@ def test_dau_maintenance_stream_matches_batch_query(spark, tmp_path):
     }
     got = {
         r["day"]: tuple(r["kmin"])
-        for r in read_kmv_state(spark, sk_dir, key="day", key_type="timestamp").collect()
+        for r in lattice.read_state(spark, DAU, sk_dir).collect()
     }
     assert got == want and len(got) > 0
 
     # re-delivery: idempotent merge absorbs duplicated events
     events.filter(F.col("event_id") % 2 == 0).coalesce(1).write.mode("append").parquet(ev_dir)
-    start_dau_maintenance_stream(spark, ev_dir, sk_dir, ckpt).awaitTermination(120)
+    lattice.start_maintenance_stream(spark, DAU, ev_dir, sk_dir, ckpt).awaitTermination(120)
     assert {
         r["day"]: tuple(r["kmin"])
-        for r in read_kmv_state(spark, sk_dir, key="day", key_type="timestamp").collect()
+        for r in lattice.read_state(spark, DAU, sk_dir).collect()
     } == want
 
 
@@ -259,11 +254,9 @@ def test_logbin_maintenance_stream_matches_batch(spark, tmp_path):
 
     from collect_mobile_devices_datalake_spark.operators.sketches import logbin_hist
     from collect_mobile_devices_datalake_spark.session import load_table
+    from collect_mobile_devices_datalake_spark.streaming import lattice
     from collect_mobile_devices_datalake_spark.streaming.sketch_maintenance import (
-        _maintain_logbin_batch,
-        compact_logbin_state,
-        read_logbin_state,
-        start_logbin_maintenance_stream,
+        LOGBIN,
     )
 
     orders = load_table(spark, "orders", SF_SMOKE).select("o_orderkey", "o_totalprice")
@@ -274,9 +267,9 @@ def test_logbin_maintenance_stream_matches_batch(spark, tmp_path):
     first = orders.filter(F.col("o_orderkey") % 2 == 0)
     second = orders.filter(F.col("o_orderkey") % 2 == 1)
     first.coalesce(1).write.mode("append").parquet(orders_dir)
-    start_logbin_maintenance_stream(spark, orders_dir, sketch_dir, ckpt).awaitTermination(120)
+    lattice.start_maintenance_stream(spark, LOGBIN, orders_dir, sketch_dir, ckpt).awaitTermination(120)
     second.coalesce(1).write.mode("append").parquet(orders_dir)
-    start_logbin_maintenance_stream(spark, orders_dir, sketch_dir, ckpt).awaitTermination(120)
+    lattice.start_maintenance_stream(spark, LOGBIN, orders_dir, sketch_dir, ckpt).awaitTermination(120)
 
     def hist_map(df):
         return {
@@ -289,15 +282,15 @@ def test_logbin_maintenance_stream_matches_batch(spark, tmp_path):
             orders.select(F.round(F.col("o_totalprice") * 100).cast("long").alias("c"))
         )
     )
-    assert hist_map(read_logbin_state(spark, sketch_dir)) == want and len(want) > 0
+    assert hist_map(lattice.read_state(spark, LOGBIN, sketch_dir)) == want and len(want) > 0
 
     # checkpoint replay (same batch id) rewrites wholesale: no drift
-    _maintain_logbin_batch(sketch_dir)(first, 0)
-    assert hist_map(read_logbin_state(spark, sketch_dir)) == want
+    lattice.maintain_batch(LOGBIN, sketch_dir)(first, 0)
+    assert hist_map(lattice.read_state(spark, LOGBIN, sketch_dir)) == want
 
     # committed compaction folds to one generation, state unchanged
-    compact_logbin_state(spark, sketch_dir)
-    assert hist_map(read_logbin_state(spark, sketch_dir)) == want
+    lattice.compact_state(spark, LOGBIN, sketch_dir)
+    assert hist_map(lattice.read_state(spark, LOGBIN, sketch_dir)) == want
     live = [d for d in os.listdir(sketch_dir) if d.startswith("batch=")]
     assert any(d.startswith("batch=c") for d in live)
 
@@ -471,12 +464,8 @@ def test_hll_maintenance_stream_matches_batch(spark, tmp_path):
         hll_registers,
     )
     from collect_mobile_devices_datalake_spark.session import load_table
-    from collect_mobile_devices_datalake_spark.streaming.sketch_maintenance import (
-        _maintain_hll_batch,
-        compact_hll_state,
-        read_hll_state,
-        start_hll_maintenance_stream,
-    )
+    from collect_mobile_devices_datalake_spark.streaming import lattice
+    from collect_mobile_devices_datalake_spark.streaming.sketch_maintenance import HLL
 
     docs = load_table(spark, "documents", SF_SMOKE).select("doc_id", "text", "source")
     docs_dir = str(tmp_path / "docs_in")
@@ -486,16 +475,16 @@ def test_hll_maintenance_stream_matches_batch(spark, tmp_path):
     def state_map():
         return {
             (r["source"], r["reg"]): r["mrho"]
-            for r in read_hll_state(spark, sketch_dir).collect()
+            for r in lattice.read_state(spark, HLL, sketch_dir).collect()
         }
 
     first = docs.filter(F.col("doc_id") % 2 == 0)
     second = docs.filter(F.col("doc_id") % 2 == 1)
     first.coalesce(1).write.mode("append").parquet(docs_dir)
-    start_hll_maintenance_stream(spark, docs_dir, sketch_dir, ckpt).awaitTermination(120)
+    lattice.start_maintenance_stream(spark, HLL, docs_dir, sketch_dir, ckpt).awaitTermination(120)
 
     second.coalesce(1).write.mode("append").parquet(docs_dir)
-    start_hll_maintenance_stream(spark, docs_dir, sketch_dir, ckpt).awaitTermination(120)
+    lattice.start_maintenance_stream(spark, HLL, docs_dir, sketch_dir, ckpt).awaitTermination(120)
 
     want = {
         (r["source"], r["reg"]): r["mrho"]
@@ -505,18 +494,18 @@ def test_hll_maintenance_stream_matches_batch(spark, tmp_path):
 
     # wholesale re-delivery under new file names: absorbed, zero change
     first.coalesce(1).write.mode("append").parquet(docs_dir)
-    start_hll_maintenance_stream(spark, docs_dir, sketch_dir, ckpt).awaitTermination(120)
+    lattice.start_maintenance_stream(spark, HLL, docs_dir, sketch_dir, ckpt).awaitTermination(120)
     assert state_map() == want
     assert len([d for d in os.listdir(sketch_dir) if d.startswith("batch=")]) >= 3
 
     # compaction folds to one partition, state unchanged; a partial-
     # commit replay (clobber + rerun of the same batch id) repairs it
-    compact_hll_state(spark, sketch_dir)
+    lattice.compact_state(spark, HLL, sketch_dir)
     assert [d for d in os.listdir(sketch_dir) if d.startswith("batch=")] == [
         "batch=compacted"
     ]
     assert state_map() == want
-    fn = _maintain_hll_batch(sketch_dir)
+    fn = lattice.maintain_batch(HLL, sketch_dir)
     fn(docs.filter(F.col("doc_id") % 3 == 0), 99)
     fn(docs, 99)
     assert state_map() == want  # full re-delivery of batch 99 is a no-op
@@ -585,12 +574,8 @@ def test_bloom_maintenance_stream_matches_batch(spark, tmp_path):
     )
     from collect_mobile_devices_datalake_spark.session import load_table
     from collect_mobile_devices_datalake_spark.sources.synthetic import saved_list
-    from collect_mobile_devices_datalake_spark.streaming.sketch_maintenance import (
-        _maintain_bloom_batch,
-        compact_bloom_state,
-        read_bloom_state,
-        start_bloom_maintenance_stream,
-    )
+    from collect_mobile_devices_datalake_spark.streaming import lattice
+    from collect_mobile_devices_datalake_spark.streaming.sketch_maintenance import BLOOM
 
     orders = load_table(spark, "orders", SF_SMOKE).select(
         "o_orderkey", "o_orderpriority"
@@ -601,16 +586,16 @@ def test_bloom_maintenance_stream_matches_batch(spark, tmp_path):
 
     def state_map():
         return {
-            r["word"]: r["bits"] for r in read_bloom_state(spark, sketch_dir).collect()
+            r["word"]: r["bits"] for r in lattice.read_state(spark, BLOOM, sketch_dir).collect()
         }
 
     first = orders.filter(F.col("o_orderkey") % 2 == 0)
     second = orders.filter(F.col("o_orderkey") % 2 == 1)
     first.coalesce(1).write.mode("append").parquet(src_dir)
-    start_bloom_maintenance_stream(spark, src_dir, sketch_dir, ckpt).awaitTermination(120)
+    lattice.start_maintenance_stream(spark, BLOOM, src_dir, sketch_dir, ckpt).awaitTermination(120)
 
     second.coalesce(1).write.mode("append").parquet(src_dir)
-    start_bloom_maintenance_stream(spark, src_dir, sketch_dir, ckpt).awaitTermination(120)
+    lattice.start_maintenance_stream(spark, BLOOM, src_dir, sketch_dir, ckpt).awaitTermination(120)
 
     want = {
         r["word"]: r["bits"]
@@ -620,18 +605,18 @@ def test_bloom_maintenance_stream_matches_batch(spark, tmp_path):
 
     # wholesale re-delivery under new file names: absorbed, zero change
     first.coalesce(1).write.mode("append").parquet(src_dir)
-    start_bloom_maintenance_stream(spark, src_dir, sketch_dir, ckpt).awaitTermination(120)
+    lattice.start_maintenance_stream(spark, BLOOM, src_dir, sketch_dir, ckpt).awaitTermination(120)
     assert state_map() == want
     assert len([d for d in os.listdir(sketch_dir) if d.startswith("batch=")]) >= 3
 
     # compaction folds to one partition, state unchanged; a partial-
     # commit replay (clobber + rerun of the same batch id) repairs it
-    compact_bloom_state(spark, sketch_dir)
+    lattice.compact_state(spark, BLOOM, sketch_dir)
     assert [d for d in os.listdir(sketch_dir) if d.startswith("batch=")] == [
         "batch=compacted"
     ]
     assert state_map() == want
-    fn = _maintain_bloom_batch(sketch_dir)
+    fn = lattice.maintain_batch(BLOOM, sketch_dir)
     fn(orders.filter(F.col("o_orderkey") % 3 == 0), 99)
     fn(orders, 99)
     assert state_map() == want  # full re-delivery of batch 99 is a no-op

@@ -922,11 +922,9 @@ def test_survivorship_stream_matches_batch_and_redelivery(spark, tmp):
         survivorship_golden,
         survivorship_keyed,
     )
+    from collect_mobile_devices_datalake_spark.streaming import lattice
     from collect_mobile_devices_datalake_spark.streaming.survivorship_maintenance import (
-        _maintain_surv_batch,
-        compact_survivorship_state,
-        read_survivorship_state,
-        start_survivorship_stream,
+        SURVIVORSHIP,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -939,9 +937,9 @@ def test_survivorship_stream_matches_batch_and_redelivery(spark, tmp):
     first = events.filter(F.col("event_id") % 2 == 0)
     second = events.filter(F.col("event_id") % 2 == 1)
     first.coalesce(1).write.mode("append").parquet(ev_dir)
-    start_survivorship_stream(spark, ev_dir, st_dir, ckpt).awaitTermination(120)
+    lattice.start_maintenance_stream(spark, SURVIVORSHIP, ev_dir, st_dir, ckpt).awaitTermination(120)
     second.coalesce(1).write.mode("append").parquet(ev_dir)
-    start_survivorship_stream(spark, ev_dir, st_dir, ckpt).awaitTermination(120)
+    lattice.start_maintenance_stream(spark, SURVIVORSHIP, ev_dir, st_dir, ckpt).awaitTermination(120)
 
     def gold(df):
         return {
@@ -954,19 +952,19 @@ def test_survivorship_stream_matches_batch_and_redelivery(spark, tmp):
 
     want_df = survivorship_golden(survivorship_keyed(events))
     want_gold, want_counts = gold(want_df), counts(want_df)
-    got = read_survivorship_state(spark, st_dir)
+    got = lattice.read_state(spark, SURVIVORSHIP, st_dir)
     assert gold(got) == want_gold and len(want_gold) > 0
     assert counts(got) == want_counts
 
     # checkpoint replay (same batch id): wholesale overwrite, no drift
-    _maintain_surv_batch(st_dir)(first, 0)
-    got = read_survivorship_state(spark, st_dir)
+    lattice.maintain_batch(SURVIVORSHIP, st_dir)(first, 0)
+    got = lattice.read_state(spark, SURVIVORSHIP, st_dir)
     assert gold(got) == want_gold and counts(got) == want_counts
 
     # re-delivery under a FRESH batch id: argmax legs immune, counts
     # double-count exactly the re-delivered rows
-    _maintain_surv_batch(st_dir)(first, 99)
-    got = read_survivorship_state(spark, st_dir)
+    lattice.maintain_batch(SURVIVORSHIP, st_dir)(first, 99)
+    got = lattice.read_state(spark, SURVIVORSHIP, st_dir)
     assert gold(got) == want_gold
     dup = {r.user_id: r.n for r in first.groupBy("user_id").agg(F.count("*").alias("n")).collect()}
     assert counts(got) == {
@@ -976,8 +974,8 @@ def test_survivorship_stream_matches_batch_and_redelivery(spark, tmp):
     # compaction folds to one partition; state (incl. the double-count)
     # is preserved exactly
     before_gold, before_counts = gold(got), counts(got)
-    compact_survivorship_state(spark, st_dir)
-    got = read_survivorship_state(spark, st_dir)
+    lattice.compact_state(spark, SURVIVORSHIP, st_dir)
+    got = lattice.read_state(spark, SURVIVORSHIP, st_dir)
     assert gold(got) == before_gold and counts(got) == before_counts
     parts = [d for d in os.listdir(st_dir) if d.startswith("batch=")]
     assert parts == ["batch=compacted"]
@@ -994,10 +992,10 @@ def test_priority_sample_state_idempotent_merge(spark, tmp_path):
 
     from collect_mobile_devices_datalake_spark.operators.selection import _PRI_K
     from collect_mobile_devices_datalake_spark.session import load_table
+    from collect_mobile_devices_datalake_spark.streaming import lattice
     from collect_mobile_devices_datalake_spark.streaming.sample_maintenance import (
-        compact_sample_state,
+        SAMPLE,
         priority_partial,
-        read_sample_state,
     )
 
     d = load_table(spark, "documents", "/root/testdata/sf0.001").select(
@@ -1012,7 +1010,7 @@ def test_priority_sample_state_idempotent_merge(spark, tmp_path):
         assert p.count() <= _PRI_K + 1
         p.write.mode("overwrite").parquet(f"{state}/batch={i}")
     merged_once = {
-        (r.doc_id, r.pri) for r in read_sample_state(spark, state).collect()
+        (r.doc_id, r.pri) for r in lattice.read_state(spark, SAMPLE, state).collect()
     }
     # one-shot over the whole corpus must equal the fold of the tranches
     one_shot = {
@@ -1022,18 +1020,18 @@ def test_priority_sample_state_idempotent_merge(spark, tmp_path):
     # wholesale re-delivery: copy batch=0 under a fresh id -> no change
     shutil.copytree(f"{state}/batch=0", f"{state}/batch=99")
     merged_again = {
-        (r.doc_id, r.pri) for r in read_sample_state(spark, state).collect()
+        (r.doc_id, r.pri) for r in lattice.read_state(spark, SAMPLE, state).collect()
     }
     assert merged_again == merged_once
     # compaction folds to one partition and preserves the sample
-    compact_sample_state(spark, state)
+    lattice.compact_state(spark, SAMPLE, state)
     import os
 
     assert sorted(
         d for d in os.listdir(state) if d.startswith("batch=")
     ) == ["batch=compacted"]
     assert {
-        (r.doc_id, r.pri) for r in read_sample_state(spark, state).collect()
+        (r.doc_id, r.pri) for r in lattice.read_state(spark, SAMPLE, state).collect()
     } == merged_once
 
 
@@ -1046,17 +1044,15 @@ def test_profile_state_minmax_lattice_idempotence(spark, tmp_path):
     import os
 
     from collect_mobile_devices_datalake_spark.streaming.profile_maintenance import (
-        compact_profile_state,
+        PROFILE,
         profile_partial,
-        read_profile_state,
-        _profile_family,
     )
     from collect_mobile_devices_datalake_spark.streaming import lattice
 
     sf = "/root/testdata/sf0.001"
     docs = load_table(spark, "documents", sf).select("doc_id", "text", "source")
     st = str(tmp_path / "profile")
-    fn = lattice.maintain_batch(_profile_family(), st)
+    fn = lattice.maintain_batch(PROFILE, st)
     first = docs.filter(F.col("doc_id") % 2 == 0)
     second = docs.filter(F.col("doc_id") % 2 == 1)
     fn(first, 0)
@@ -1066,18 +1062,18 @@ def test_profile_state_minmax_lattice_idempotence(spark, tmp_path):
         return {tuple(r) for r in df.collect()}
 
     want = snap(profile_partial(docs))  # one-shot profile == folded state
-    assert snap(read_profile_state(spark, st)) == want and len(want) > 0
+    assert snap(lattice.read_state(spark, PROFILE, st)) == want and len(want) > 0
     # partials are bounded: one row per source per batch
     n_sources = docs.select("source").distinct().count()
     assert profile_partial(first).count() <= n_sources
 
     fn(first, 0)  # checkpoint replay: wholesale overwrite, no drift
-    assert snap(read_profile_state(spark, st)) == want
+    assert snap(lattice.read_state(spark, PROFILE, st)) == want
     fn(first, 99)  # re-delivery under a fresh batch id: absorbed by min/max
-    assert snap(read_profile_state(spark, st)) == want
+    assert snap(lattice.read_state(spark, PROFILE, st)) == want
 
-    compact_profile_state(spark, st)
-    assert snap(read_profile_state(spark, st)) == want
+    lattice.compact_state(spark, PROFILE, st)
+    assert snap(lattice.read_state(spark, PROFILE, st)) == want
     parts = [d for d in os.listdir(st) if d.startswith("batch=")]
     assert parts == ["batch=compacted"]
 
@@ -1091,14 +1087,13 @@ def test_topk_state_mg_guarantee_under_planted_skew(spark, tmp_path):
     reduction, and the planted heavy hitters rank first. Checkpoint
     replay (same batch id) is absorbed wholesale; the state stays
     bounded at <= K_CAND+1 rows per batch."""
+    import dataclasses
     import os
 
     from collect_mobile_devices_datalake_spark.streaming import lattice
     from collect_mobile_devices_datalake_spark.streaming.topk_maintenance import (
         K_CAND,
-        _topk_family,
-        read_topk_counters,
-        read_topk_state,
+        TOPK,
         topk_partial,
     )
 
@@ -1125,7 +1120,10 @@ def test_topk_state_mg_guarantee_under_planted_skew(spark, tmp_path):
     }
 
     st = str(tmp_path / "topk")
-    fn = lattice.maintain_batch(_topk_family(), st)
+    fn = lattice.maintain_batch(TOPK, st)
+    # the raw folded state (counter + marker rows): the MG guarantee is
+    # asserted over EVERY counter, not just the surfaced top K_OUT
+    counters_family = dataclasses.replace(TOPK, read_post=None)
     first = docs.filter(F.col("doc_id") % 2 == 0)
     second = docs.filter(F.col("doc_id") % 2 == 1)
     fn(first, 0)
@@ -1137,7 +1135,7 @@ def test_topk_state_mg_guarantee_under_planted_skew(spark, tmp_path):
     err0 = [r["err"] for r in p0 if r["word"] is None]
     assert err0 and err0[0] > 0, "planted skew failed to force c* > 0"
 
-    counters = read_topk_counters(spark, st).collect()
+    counters = lattice.read_state(spark, counters_family, st).collect()
     err_total = sum(r["err"] for r in counters if r["word"] is None)
     assert err_total > 0
     for r in counters:
@@ -1152,7 +1150,7 @@ def test_topk_state_mg_guarantee_under_planted_skew(spark, tmp_path):
             assert w in surfaced, (w, true, err_total)
 
     # the surfaced top-k leads with the planted heavy hitters, in order
-    top = read_topk_state(spark, st).orderBy("rk").collect()
+    top = lattice.read_state(spark, TOPK, st).orderBy("rk").collect()
     assert [r["word"] for r in top[:5]] == [f"w{i}" for i in range(5)]
     for r in top:
         assert r["cnt_min"] <= true_counts[r["word"]] <= r["cnt_max"]
@@ -1162,7 +1160,7 @@ def test_topk_state_mg_guarantee_under_planted_skew(spark, tmp_path):
     fn(first, 0)
     after = {
         (r["word"], r["cnt"], r["err"])
-        for r in read_topk_counters(spark, st).collect()
+        for r in lattice.read_state(spark, counters_family, st).collect()
     }
     assert after == before
     parts = [d for d in os.listdir(st) if d.startswith("batch=")]
@@ -1183,15 +1181,13 @@ def test_lshindex_state_equals_batch_index_and_absorbs_redelivery(spark, tmp_pat
     )
     from collect_mobile_devices_datalake_spark.streaming import lattice
     from collect_mobile_devices_datalake_spark.streaming.lshindex_maintenance import (
-        _lshindex_family,
-        compact_lshindex_state,
-        read_lshindex_state,
+        LSHINDEX,
     )
 
     sf = "/root/testdata/sf0.001"
     emb = load_table(spark, "embeddings", sf).select("vec_id", "embedding", "label")
     st = str(tmp_path / "lshidx")
-    fn = lattice.maintain_batch(_lshindex_family(), st)
+    fn = lattice.maintain_batch(LSHINDEX, st)
     first = emb.filter(F.col("vec_id") % 2 == 0)
     second = emb.filter(F.col("vec_id") % 2 == 1)
     fn(first, 0)
@@ -1201,14 +1197,73 @@ def test_lshindex_state_equals_batch_index_and_absorbs_redelivery(spark, tmp_pat
         return {tuple(r) for r in df.collect()}
 
     want = snap(bucket_index(spark, sf))  # the persisted batch index
-    assert snap(read_lshindex_state(spark, st)) == want and len(want) > 0
+    assert snap(lattice.read_state(spark, LSHINDEX, st)) == want and len(want) > 0
 
     fn(first, 0)  # checkpoint replay: wholesale partition overwrite
-    assert snap(read_lshindex_state(spark, st)) == want
+    assert snap(lattice.read_state(spark, LSHINDEX, st)) == want
     fn(first, 99)  # wholesale re-delivery: absorbed by the G-set distinct
-    assert snap(read_lshindex_state(spark, st)) == want
+    assert snap(lattice.read_state(spark, LSHINDEX, st)) == want
 
-    compact_lshindex_state(spark, st)
-    assert snap(read_lshindex_state(spark, st)) == want
+    lattice.compact_state(spark, LSHINDEX, st)
+    assert snap(lattice.read_state(spark, LSHINDEX, st)) == want
     parts = [d for d in os.listdir(st) if d.startswith("batch=")]
     assert parts == ["batch=compacted"]
+
+
+# family constant -> the SF_SMOKE table its source_schema is drawn from
+_LATTICE_FAMILIES = [
+    ("sketch_maintenance", "KMV", "documents"),
+    ("sketch_maintenance", "DAU", "events"),
+    ("sketch_maintenance", "CMS", "documents"),
+    ("sketch_maintenance", "LOGBIN", "orders"),
+    ("sketch_maintenance", "HLL", "documents"),
+    ("sketch_maintenance", "BLOOM", "orders"),
+    ("sample_maintenance", "SAMPLE", "documents"),
+    ("survivorship_maintenance", "SURVIVORSHIP", "events"),
+    ("profile_maintenance", "PROFILE", "documents"),
+    ("topk_maintenance", "TOPK", "documents"),
+    ("lshindex_maintenance", "LSHINDEX", "embeddings"),
+]
+
+
+@pytest.mark.parametrize(
+    "module,family,table", _LATTICE_FAMILIES, ids=[f for _, f, _ in _LATTICE_FAMILIES]
+)
+def test_lattice_family_laws(spark, tmp_path, module, family, table):
+    """The two protocol laws every lattice family must keep, whatever its
+    lattice class: replaying a batch id (checkpoint replay) rewrites that
+    partition wholesale and leaves the read state unchanged, and
+    compaction leaves the read state unchanged."""
+    import importlib
+    from collections import Counter
+
+    from collect_mobile_devices_datalake_spark.streaming import lattice
+
+    fam = getattr(
+        importlib.import_module(
+            f"collect_mobile_devices_datalake_spark.streaming.{module}"
+        ),
+        family,
+    )
+    schema = spark.createDataFrame([], fam.source_schema).schema
+    rows = load_table(spark, table, SF).select(
+        *[F.col(f.name).cast(f.dataType) for f in schema.fields]
+    )
+    key = F.col(schema.fields[0].name) % 2
+    st = str(tmp_path / fam.name)
+    fn = lattice.maintain_batch(fam, st)
+    fn(rows.filter(key == 0), 0)
+    fn(rows.filter(key == 1), 1)
+
+    def state():
+        return Counter(
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in lattice.read_state(spark, fam, st).collect()
+        )
+
+    want = state()
+    assert sum(want.values()) > 0
+    fn(rows.filter(key == 0), 0)  # checkpoint replay of batch 0
+    assert state() == want
+    lattice.compact_state(spark, fam, st)
+    assert state() == want
