@@ -11,6 +11,7 @@ driver-facing results stay distributed — no collect of payload rows).
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
 import re
@@ -172,9 +173,14 @@ def main() -> None:
     m = re.search(r"sf([\d.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
+    from collect_mobile_devices_datalake_spark import artifacts
     from collect_mobile_devices_datalake_spark.registry import REGISTRY, _ensure_loaded
     from collect_mobile_devices_datalake_spark.session import get_spark
 
+    # clear scratch dirs stranded by a prior crashed bench/driver process
+    # before adding our own; ours go when this process exits
+    artifacts.sweep_stale()
+    atexit.register(artifacts.cleanup)
     _ensure_loaded()
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -232,18 +238,8 @@ def main() -> None:
 
     from collect_mobile_devices_datalake_spark.operators.streaming_batch import (
         cleanup_stream_temp_roots,
-        sweep_stale_stream_temp_roots,
     )
 
-    # clear any roots stranded by a prior crashed bench/driver process
-    # before adding our own (stream temp roots AND persisted ANN indexes
-    # left by prior python sessions' process-local index caches)
-    sweep_stale_stream_temp_roots()
-    from collect_mobile_devices_datalake_spark.operators.similarity import (
-        sweep_stale_ann_indexes,
-    )
-
-    sweep_stale_ann_indexes()
     for name in STREAMING:
         spec = REGISTRY[name]
         best = float("inf")

@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import artifacts
 from ..registry import register
 from ..session import load_table
 
@@ -721,8 +722,6 @@ def q_zorder_skipping_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Time travel over the manifest lake (ingest/manifest.py) as a VALUE-ORACLED
 # query: three commits — append, append, rewrite — each read back `as_of`.
 
-_TT_LAKE_CACHE: dict[str, str] = {}
-
 
 def _time_travel_lake(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per corpus) a manifest-committed lake with a three-txn
@@ -733,37 +732,30 @@ def _time_travel_lake(spark: SparkSession, sf_dir: str) -> str:
     - ``tt3`` REWRITES the table (compaction: same rows, new files,
       ``removes`` listing every pre-rewrite file).
 
-    Cached by corpus path + the orders file's identity, mirroring the ANN
-    index cache's key discipline (similarity.py): two scale factors can
-    never collide.
+    Built once per corpus path + orders fingerprint
+    (``artifacts.get_or_build``): two scale factors can never collide.
     """
-    import os
-    import tempfile
-
     from ..ingest import manifest
 
-    st = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    key = f"{sf_dir}:{st.st_size}:{st.st_mtime_ns}"
-    path = _TT_LAKE_CACHE.get(key)
-    if path is not None:
+    def build() -> str:
+        path = artifacts.scratch_dir("tt_lake")
+        orders = load_table(spark, "orders", sf_dir)
+        n1 = manifest.stage_write(
+            orders.filter(F.col("o_orderkey") % 3 == 0), path, "orders", "tt1"
+        )
+        manifest.publish(path, "tt1", {"orders": n1})
+        n2 = manifest.stage_write(
+            orders.filter(F.col("o_orderkey") % 3 == 1), path, "orders", "tt2"
+        )
+        manifest.publish(path, "tt2", {"orders": n2})
+        # rewrite: read the CURRENT committed snapshot, compact it into fresh
+        # files, and publish with `removes` — content-identical by construction
+        cur = manifest.read_committed(spark, path, "orders")
+        n3 = manifest.stage_write(cur.repartition(2), path, "orders", "tt3")
+        manifest.publish(path, "tt3", {"orders": n3}, removes={"orders": n1 + n2})
         return path
-    path = tempfile.mkdtemp(prefix="tt_lake_")
-    orders = load_table(spark, "orders", sf_dir)
-    n1 = manifest.stage_write(
-        orders.filter(F.col("o_orderkey") % 3 == 0), path, "orders", "tt1"
-    )
-    manifest.publish(path, "tt1", {"orders": n1})
-    n2 = manifest.stage_write(
-        orders.filter(F.col("o_orderkey") % 3 == 1), path, "orders", "tt2"
-    )
-    manifest.publish(path, "tt2", {"orders": n2})
-    # rewrite: read the CURRENT committed snapshot, compact it into fresh
-    # files, and publish with `removes` — content-identical by construction
-    cur = manifest.read_committed(spark, path, "orders")
-    n3 = manifest.stage_write(cur.repartition(2), path, "orders", "tt3")
-    manifest.publish(path, "tt3", {"orders": n3}, removes={"orders": n1 + n2})
-    _TT_LAKE_CACHE[key] = path
-    return path
+
+    return artifacts.get_or_build(spark, "tt_lake", "", [(sf_dir, "orders")], build)
 
 
 @register(

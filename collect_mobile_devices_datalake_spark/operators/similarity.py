@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .. import artifacts
 from ..functions.vectors import cosine_similarity
 from ..registry import register
 from ..session import fan_out, load_table
@@ -105,10 +106,20 @@ def _plane_coeff(j: int, i: int) -> float:
 
 _MT_FAST_DIM = 64  # the lake's embedding width; other lengths take the exact per-row fold
 
-_BUCKET_UDF_CACHE: dict[tuple, object] = {}
+
+def _hyperplane_buckets_udf(
+    spark: SparkSession, plane_ids: tuple[tuple[int, ...], ...]
+):
+    """The bucket kernel for ``plane_ids``, built once per Spark
+    application: a UDF built under a stopped session still points at that
+    context's accumulator server, and every task using it fails to update
+    its accumulator."""
+    return artifacts.get_or_build(
+        spark, "bucket_udf", plane_ids, (), lambda: _bucket_kernel(plane_ids)
+    )
 
 
-def _hyperplane_buckets_udf(plane_ids: tuple[tuple[int, ...], ...]):
+def _bucket_kernel(plane_ids: tuple[tuple[int, ...], ...]):
     """Arrow-vectorized twin of the sequential-fold bucket expressions.
 
     ``plane_ids[t]`` lists the global plane id of each bit of output
@@ -134,10 +145,6 @@ def _hyperplane_buckets_udf(plane_ids: tuple[tuple[int, ...], ...]):
     ``exists(vec, isnull)`` flag (one cheap codegen'd pass) alongside
     the vector.
     """
-    udf = _BUCKET_UDF_CACHE.get(plane_ids)
-    if udf is not None:
-        return udf
-
     import numpy as np
     import pandas as pd
 
@@ -217,7 +224,6 @@ def _hyperplane_buckets_udf(plane_ids: tuple[tuple[int, ...], ...]):
             vec, F.coalesce(F.exists(vec, lambda x: x.isNull()), F.lit(False))
         )
 
-    _BUCKET_UDF_CACHE[plane_ids] = udf
     return udf
 
 
@@ -229,7 +235,8 @@ def lsh_bucket(vec: Column) -> Column:
     term-for-term twin of the oracle SQL).
     """
     return F.element_at(
-        _hyperplane_buckets_udf((tuple(range(N_PLANES)),))(vec), 1
+        _hyperplane_buckets_udf(SparkSession.active(), (tuple(range(N_PLANES)),))(vec),
+        1,
     )
 
 
@@ -389,7 +396,7 @@ def _multitable_buckets(vec: Column, planes: int = PLANES_PER_TABLE) -> Column:
     ids = tuple(
         tuple(_plane_j_int(t, jj) for jj in range(planes)) for t in range(N_TABLES)
     )
-    return _hyperplane_buckets_udf(ids)(vec)
+    return _hyperplane_buckets_udf(SparkSession.active(), ids)(vec)
 
 
 def _multitable_buckets_expr(vec: Column, planes: int = PLANES_PER_TABLE) -> Column:
@@ -461,123 +468,18 @@ def _multiprobe(
     return probes
 
 
-# session-lifetime cache: index key -> parquet path of the built index table
-# (temp dirs, reclaimed at process exit)
-_INDEX_CACHE: dict[str, str] = {}
-
-
-def _corpus_fingerprint(sf_dir: str, table: str = "embeddings") -> str:
-    """Cheap content fingerprint of the index's source table (shared
-    ``session.table_fingerprint`` discipline). Folded into the index
-    cache key, so regenerating the corpus in place (e.g. a test fixture
-    rewriting the same path) can never be served a stale index built
-    from the previous bytes.
-    """
-    from ..session import table_fingerprint
-
-    return table_fingerprint(sf_dir, table)
-
-
-def _persisted_index(
-    spark: SparkSession, kind: str, sf_dir: str, params: str, build,
-    table: str = "embeddings",
-) -> DataFrame:
-    """Build-once-read-many ANN index as a PERSISTED parquet table.
-
-    This is the 100 TB-honest form of an index: built ONCE per corpus,
-    written to storage, then read back by every probe query. The previous
-    shape — ``localCheckpoint(eager=True)`` inside each query —
-    re-materialized the full index per query, pinned executor storage for
-    blocks that are NOT fault-tolerant (a lost executor kills the query),
-    and could not be shared across queries or sessions. A real deployment
-    maintains these as lake tables; probes prune to the keys they touch.
-
-    The cache key is composed here — algorithm kind + algorithm parameters
-    + corpus path + corpus fingerprint — so no caller can accidentally
-    collide two indexes that differ in parameters or underlying bytes.
-    """
-    import os
-
-    key = f"{kind}:{params}:{sf_dir}:{_corpus_fingerprint(sf_dir, table)}"
-    path = _INDEX_CACHE.get(key)
-    if path is not None and not os.path.isdir(path):
-        # another process's sweep (or a tmp cleaner) reclaimed the dir out
-        # from under this session's cache — rebuild instead of failing every
-        # subsequent probe until process restart
-        _INDEX_CACHE.pop(key, None)
-        path = None
-    if path is None:
-        import tempfile
-
-        # pid-marked like the stream temp roots, so a sweep from another
-        # process can tell a live session's indexes from stranded ones
-        path = tempfile.mkdtemp(prefix=f"ann_index_pid{os.getpid()}_")
-        build().write.mode("overwrite").parquet(path)
-        _INDEX_CACHE[key] = path
-    return spark.read.parquet(path)
-
-
-def sweep_stale_ann_indexes(
-    min_age_sec: float = 3600.0, hard_ttl_sec: float = 7 * 86400.0
-) -> None:
-    """Remove ``ann_index_*`` dirs stranded by PRIOR processes.
-
-    The index cache is process-local (``_INDEX_CACHE``), so every python
-    session that builds an index leaves its parquet dir behind — benign
-    individually, hundreds of dirs across a round of sessions. Same
-    liveness rules as ``sweep_stale_stream_temp_roots`` (pid markers are
-    untrustworthy across recycling/namespaces): dead-pid roots need
-    ``min_age_sec``, any root older than ``hard_ttl_sec`` goes, legacy
-    unmarked roots use the age bar alone."""
-    import glob
-    import os
-    import re
-    import shutil
-    import tempfile
-    import time
-
-    from .streaming_batch import _pid_alive
-
-    now = time.time()
-    for path in glob.glob(os.path.join(tempfile.gettempdir(), "ann_index_*")):
-        try:
-            age = now - os.path.getmtime(path)
-        except OSError:
-            continue
-        m = re.match(r"ann_index_pid(\d+)_", os.path.basename(path))
-        if m:
-            # a live owning pid wins UP TO an absolute cap (4x the hard
-            # TTL): the session's _INDEX_CACHE may still point here, and
-            # pid reuse by an unrelated long-lived process must not pin an
-            # orphan forever — past the cap the dir goes regardless, and a
-            # genuinely live owner rebuilds via the isdir() recheck in
-            # _persisted_index (ADVICE r12: the exemption alone made disk
-            # use unbounded for long sessions)
-            if _pid_alive(int(m.group(1))) and age < 4 * hard_ttl_sec:
-                continue
-            if age < min(min_age_sec, hard_ttl_sec):
-                continue
-        elif not m and age < min_age_sec:
-            continue
-        shutil.rmtree(path, ignore_errors=True)
-
-
-# planes per corpus, cached by the same fingerprint the index cache uses
-_PLANES_CACHE: dict[str, int] = {}
-
-
 def corpus_planes(spark: SparkSession, sf_dir: str) -> int:
     """Effective hyperplane count for this corpus (planes_for_count of
-    the embeddings row count), cached per corpus fingerprint — one count
-    job per corpus per process; at 100 TB the row count comes from the
-    table's catalog statistics for free."""
-    key = f"{sf_dir}:{_corpus_fingerprint(sf_dir)}"
-    p = _PLANES_CACHE.get(key)
-    if p is None:
-        n = load_table(spark, "embeddings", sf_dir).count()
-        p = planes_for_count(n)
-        _PLANES_CACHE[key] = p
-    return p
+    the embeddings row count), built once per corpus fingerprint — one
+    count job per corpus per session; at 100 TB the row count comes from
+    the table's catalog statistics for free."""
+    return artifacts.get_or_build(
+        spark,
+        "planes",
+        "",
+        [(sf_dir, "embeddings")],
+        lambda: planes_for_count(load_table(spark, "embeddings", sf_dir).count()),
+    )
 
 
 def bucket_index(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -596,7 +498,9 @@ def bucket_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
 
-    return _persisted_index(spark, "lsh", sf_dir, f"t{N_TABLES}p{p}", build)
+    return artifacts.persisted_table(
+        spark, "lsh", f"t{N_TABLES}p{p}", [(sf_dir, "embeddings")], build
+    )
 
 
 def _cos_norm_sql(a: str, b: str) -> str:
@@ -719,7 +623,9 @@ def lsh_base_delta_indexes(
                 ),
             )
 
-        return _persisted_index(spark, name, sf_dir, f"t{N_TABLES}p{p}", build)
+        return artifacts.persisted_table(
+            spark, name, f"t{N_TABLES}p{p}", [(sf_dir, "embeddings")], build
+        )
 
     base = shard("lshbase", lambda v: v % _DELTA_MOD != _DELTA_REM)
     delta = shard("lshdelta", lambda v: v % _DELTA_MOD == _DELTA_REM)
@@ -1466,7 +1372,9 @@ def ivf_assignment(
             .select("vec_id", "embedding", "cell")
         )
 
-    return _persisted_index(spark, kind, sf_dir, params, build)
+    return artifacts.persisted_table(
+        spark, kind, params, [(sf_dir, "embeddings")], build
+    )
 
 
 @register(
@@ -1755,8 +1663,8 @@ def q_knn_ivfpq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = cells_for_count(emb.count())
     cents = kmeans_centroids(emb, k=k, iters=4)
     assigned = ivf_assignment(spark, sf_dir, emb, cents, params=f"k{k}i4")
-    codes = _persisted_index(
-        spark, "pq", sf_dir, f"s{PQ_SUBSPACES}",
+    codes = artifacts.persisted_table(
+        spark, "pq", f"s{PQ_SUBSPACES}", [(sf_dir, "embeddings")],
         lambda: pq_encode(emb).select("vec_id", "s", "code"),
     )
 
@@ -1925,7 +1833,7 @@ def nsw_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-``NSW_M`` exact-cosine neighbors among Hamming-1 multiprobe
     co-bucket candidates (the same probe expansion the LSH probe uses,
     applied at build time for every node). Build-once via
-    ``_persisted_index`` (key carries M + corpus fingerprint); at 100 TB
+    ``artifacts.persisted_table`` (key carries M + corpus fingerprint); at 100 TB
     this is a src-partitioned lake table and the probe-bucket join is
     bounded by bucket occupancy, never corpus^2."""
 
@@ -1981,7 +1889,9 @@ def nsw_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("src", "dst", "rk")
         )
 
-    return _persisted_index(spark, "nsw", sf_dir, f"m{NSW_M}c{NSW_SHORTLIST_C}", build)
+    return artifacts.persisted_table(
+        spark, "nsw", f"m{NSW_M}c{NSW_SHORTLIST_C}", [(sf_dir, "embeddings")], build
+    )
 
 
 @register(
@@ -2515,8 +2425,8 @@ def q_semdedup_pq_collisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # query — and fold the first SEMDEDUP_PREFIX sub-codes into the
     # collision key (s-ordered, matching the oracle's string slice)
     emb_for_codes = fan_out(load_table(spark, "embeddings", sf_dir), "vec_id")
-    codes = _persisted_index(
-        spark, "pq", sf_dir, f"s{PQ_SUBSPACES}",
+    codes = artifacts.persisted_table(
+        spark, "pq", f"s{PQ_SUBSPACES}", [(sf_dir, "embeddings")],
         lambda: pq_encode(emb_for_codes).select("vec_id", "s", "code"),
     )
     pq = (
@@ -2761,8 +2671,8 @@ def q_pq_bucket_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .training import PQ_SUBSPACES, pq_encode
 
     emb_for_codes = fan_out(load_table(spark, "embeddings", sf_dir), "vec_id")
-    codes = _persisted_index(
-        spark, "pq", sf_dir, f"s{PQ_SUBSPACES}",
+    codes = artifacts.persisted_table(
+        spark, "pq", f"s{PQ_SUBSPACES}", [(sf_dir, "embeddings")],
         lambda: pq_encode(emb_for_codes).select("vec_id", "s", "code"),
     )
     pq = (

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import artifacts
 from ..registry import register
 from ..session import load_table
 from ..streaming import lattice
@@ -38,20 +39,13 @@ SESSION_GAP = "30 minutes"
 # state/checkpoint dirs next to it — hundreds of MB per invocation at
 # sf0.1 — and the returned DataFrame reads LAZILY from those dirs, so
 # the kernel itself cannot delete them. Callers that fully consume the
-# result (bench.py, and the pytest session via a conftest finalizer)
-# call cleanup_stream_temp_roots() afterwards; stale roots from crashed
-# runs are swept by prefix+pid-liveness in sweep_stale_stream_temp_roots.
-_STREAM_TEMP_PREFIX = "stream_root_"
+# result call cleanup_stream_temp_roots() (or artifacts.cleanup())
+# afterwards; roots stranded by crashed runs go in artifacts.sweep_stale.
 _STREAM_TEMP_ROOTS: list[str] = []
 
 
 def _stream_temp_root() -> str:
-    import os
-    import tempfile
-
-    # Embed the owning pid so a concurrent sweep from another process can
-    # tell live roots from stranded ones (see sweep_stale_stream_temp_roots).
-    base = tempfile.mkdtemp(prefix=f"{_STREAM_TEMP_PREFIX}pid{os.getpid()}_")
+    base = artifacts.scratch_dir("stream")
     _STREAM_TEMP_ROOTS.append(base)
     return base
 
@@ -120,55 +114,6 @@ def _lattice_guard(
         ))
         lattice.compact_state(spark, family, state)
     return lattice.read_state(spark, family, state)
-
-
-def _pid_alive(pid: int) -> bool:
-    import os
-
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True  # exists, owned by someone else
-    return True
-
-
-def sweep_stale_stream_temp_roots(
-    min_age_sec: float = 3600.0, hard_ttl_sec: float = 7 * 86400.0
-) -> None:
-    """Best-effort removal of stream temp roots left by PRIOR processes
-    (a crashed bench/driver run can strand its dirs under /tmp).
-
-    pid liveness alone is not trustworthy: pids are recycled, and
-    ``os.kill(pid, 0)`` answers for THIS pid namespace, not the one the
-    marker was written in (containers). So a pid-marked root is removed
-    only when its pid looks dead AND the root is older than
-    ``min_age_sec`` (a recycled-dead pid can't strand a fresh live run's
-    dirs — those are younger than an hour), and removed UNCONDITIONALLY
-    once older than ``hard_ttl_sec`` (a recycled-alive pid held by an
-    unrelated long-lived daemon can't pin a stranded root forever)."""
-    import glob
-    import os
-    import re
-    import shutil
-    import tempfile
-    import time
-
-    now = time.time()
-    pattern = os.path.join(tempfile.gettempdir(), f"{_STREAM_TEMP_PREFIX}pid*_*")
-    for path in glob.glob(pattern):
-        try:
-            age = now - os.path.getmtime(path)
-        except OSError:
-            continue
-        name = os.path.basename(path)
-        m = re.match(re.escape(_STREAM_TEMP_PREFIX) + r"pid(\d+)_", name)
-        if m is None:
-            continue
-        if age < hard_ttl_sec and (_pid_alive(int(m.group(1))) or age < min_age_sec):
-            continue
-        shutil.rmtree(path, ignore_errors=True)
 
 
 @register(

@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import artifacts
 from ..registry import register
 from ..session import load_table, scoped_shuffle_width
 
@@ -495,8 +496,6 @@ def q_bpe_vocab_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     "merge chain joined back to the exploded corpus.",
 )
 def q_bpe_corpus_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .similarity import _persisted_index
-
     docs = load_table(spark, "documents", sf_dir)
 
     def _build_seg() -> DataFrame:
@@ -515,8 +514,8 @@ def q_bpe_corpus_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at 100 TB this is the vocab table a deployment keeps in the lake
     # next to the merges. bpe_learn_merges itself stays UNCACHED: it is
     # the bench guard for the learn loop.
-    seg = _persisted_index(
-        spark, "bpeseg", sf_dir, f"m{BPE_MERGES}", _build_seg, table="documents"
+    seg = artifacts.persisted_table(
+        spark, "bpeseg", f"m{BPE_MERGES}", [(sf_dir, "documents")], _build_seg
     )
     toks = docs.select(
         "doc_id", F.explode(F.split(F.trim("text"), "\\s+")).alias("word")
@@ -849,20 +848,17 @@ def _unigram_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     "perplexity proxy (the Kudo 2018 objective summed over the corpus).",
 )
 def q_unigram_corpus_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .similarity import _persisted_index
-
     docs = load_table(spark, "documents", sf_dir)
 
     def _build_seg() -> DataFrame:
         return _unigram_segments(spark, sf_dir).select("word", "nseg", "bits")
 
-    seg = _persisted_index(
+    seg = artifacts.persisted_table(
         spark,
         "uniseg",
-        sf_dir,
         f"w{UNI_MAXW}s{UNI_SEG_MAX}v{UNI_TOP_V}",
+        [(sf_dir, "documents")],
         _build_seg,
-        table="documents",
     )
     toks = docs.select(
         "doc_id", F.explode(F.split(F.trim("text"), "\\s+")).alias("word")
@@ -1127,8 +1123,6 @@ def q_wordpiece_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     "learn loop is never paid per query.",
 )
 def q_wordpiece_corpus_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .similarity import _persisted_index
-
     docs = load_table(spark, "documents", sf_dir)
 
     def _build_seg() -> DataFrame:
@@ -1142,8 +1136,8 @@ def q_wordpiece_corpus_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "word", F.size("a").cast("bigint").alias("n_wp_tokens")
             ).localCheckpoint(eager=True)
 
-    seg = _persisted_index(
-        spark, "wpseg", sf_dir, f"m{WP_MERGES}", _build_seg, table="documents"
+    seg = artifacts.persisted_table(
+        spark, "wpseg", f"m{WP_MERGES}", [(sf_dir, "documents")], _build_seg
     )
     toks = docs.select(
         "doc_id", F.explode(F.split(F.trim("text"), "\\s+")).alias("word")
@@ -1285,16 +1279,13 @@ def _maxmunch_oracle() -> str:
     "unrolled learn chain + the same doubling, unrolled.",
 )
 def q_wordpiece_maxmunch_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .similarity import _persisted_index
-
     docs = load_table(spark, "documents", sf_dir)
-    vocab = _persisted_index(
+    vocab = artifacts.persisted_table(
         spark,
         "wpvocab",
-        sf_dir,
         f"m{WP_MERGES}",
+        [(sf_dir, "documents")],
         lambda: _wp_vocab(spark, docs),
-        table="documents",
     )
     wt = _word_types(docs).localCheckpoint(eager=True)
     with scoped_shuffle_width(spark, wt.count()):
@@ -1696,16 +1687,13 @@ def _vocab_sweep_oracle() -> str:
     "learn chain + ranked vocab + per-budget doubling, unrolled.",
 )
 def q_wp_vocab_size_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .similarity import _persisted_index
-
     docs = load_table(spark, "documents", sf_dir)
-    vk = _persisted_index(
+    vk = artifacts.persisted_table(
         spark,
         "wpvocabk",
-        sf_dir,
         f"m{WP_MERGES}",
+        [(sf_dir, "documents")],
         lambda: _wp_vocab_ranked(spark, docs),
-        table="documents",
     )
     wt = _word_types(docs).localCheckpoint(eager=True)
     sweep = spark.createDataFrame([(k,) for k in WP_VOCAB_SWEEP], "k bigint")

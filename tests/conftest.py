@@ -12,38 +12,16 @@ SF_ORACLE = "/root/testdata/sf0.01"
 def spark():
     s = get_spark("pytest")
     yield s
-    # The streaming maintenance kernels copy their input under /tmp and
-    # read from it lazily; once the session's queries are all consumed,
-    # reclaim those roots (hundreds of MB per kernel run at sf0.1).
-    from collect_mobile_devices_datalake_spark.operators.streaming_batch import (
-        cleanup_stream_temp_roots,
-    )
+    # Every scratch dir the session made — persisted indexes, learned
+    # tables, the time-travel lake, streaming roots (hundreds of MB per
+    # kernel run at sf0.1) — goes once the session's queries are all
+    # consumed; dirs stranded by earlier crashed runs go with them.
+    from collect_mobile_devices_datalake_spark import artifacts
 
-    cleanup_stream_temp_roots()
+    artifacts.cleanup()
+    artifacts.sweep_stale()
 
 
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
-
-
-@pytest.fixture(scope="session")
-def registry_frames_smoke(spark):
-    """name -> DataFrame for EVERY registered key at SF_SMOKE, built once
-    per session and shared by the registry-wide schema/plan gates.
-
-    Building a frame is far from free for many operators — learn loops,
-    eager index builds, localCheckpoints, and the streaming kernels run
-    their whole availableNow protocol just to return a frame — and three
-    registry-wide gates each paid the full build sweep (~150 s apiece in
-    the r15 suite). The frames are immutable lazy plans, so sharing one
-    build across the gates changes nothing they assert."""
-    from collect_mobile_devices_datalake_spark.registry import (
-        REGISTRY,
-        _ensure_loaded,
-    )
-
-    _ensure_loaded()
-    return {
-        name: spec.spark(spark, SF_SMOKE) for name, spec in sorted(REGISTRY.items())
-    }

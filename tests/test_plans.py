@@ -270,7 +270,7 @@ def test_boilerplate_hot_set_is_anti_joined(spark):
     assert "hashpartitioning(h#" in plan or "BroadcastHashJoin" in plan, plan
 
 
-def test_lsh_probe_reads_persisted_index_and_broadcasts_queries(spark):
+def test_lsh_probe_reads_persisted_table_and_broadcasts_queries(spark):
     # the bucket index must come from a persisted parquet table (a FileScan
     # whose location is the built index, not a re-derived signature pipeline
     # materialized per query), the query side must broadcast, and no
@@ -279,17 +279,17 @@ def test_lsh_probe_reads_persisted_index_and_broadcasts_queries(spark):
     plan = formatted_plan(q)
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
-    assert "ann_index_" in plan, plan  # the persisted index table's scan path
+    assert "graft_pid" in plan, plan  # the persisted index table's scan path
     assert "BroadcastExchange" in plan, plan  # probes/query vectors move, not corpus
 
 
-def test_ivfpq_reads_both_persisted_indexes(spark):
+def test_ivfpq_reads_both_persisted_tables(spark):
     # IVF-PQ must probe against the two build-once index TABLES (cell
     # assignment + PQ codes) — two distinct persisted-index scans in the
     # plan, not per-query re-derivations of the full corpus
     q = REGISTRY["knn_ivfpq_probe"].spark(spark, SF)
     plan = formatted_plan(q)
-    assert plan.count("ann_index_") >= 2, plan
+    assert plan.count("graft_pid") >= 2, plan
     assert "CartesianProduct" not in plan, plan
 
 
@@ -395,7 +395,7 @@ def test_nsw_probe_reads_persisted_graph(spark):
     # inline) and expand hops as hash joins — no cartesian anywhere
     q = REGISTRY["knn_nsw_probe"].spark(spark, SF)
     plan = formatted_plan(q)
-    assert "ann_index_" in plan, plan
+    assert "graft_pid" in plan, plan
     assert "CartesianProduct" not in plan, plan
 
 
@@ -413,7 +413,7 @@ def test_nsw_delta_reads_persisted_bucket_index(spark):
     # corpus) and keep the batch side broadcast
     q = REGISTRY["nsw_graph_delta"].spark(spark, SF)
     plan = formatted_plan(q)
-    assert "ann_index_" in plan, plan
+    assert "graft_pid" in plan, plan
     assert "CartesianProduct" not in plan, plan
 
 
@@ -635,7 +635,7 @@ def test_lsh_incremental_reads_base_and_delta_shards(spark):
     move by broadcast."""
     q = REGISTRY["knn_lsh_incremental"].spark(spark, SF)
     plan = formatted_plan(q)
-    assert plan.count("ann_index_") >= 2, plan
+    assert plan.count("graft_pid") >= 2, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastExchange" in plan, plan
@@ -647,5 +647,5 @@ def test_ivf_incremental_reads_base_and_delta_shards(spark):
     base corpus; no cartesian product anywhere."""
     q = REGISTRY["knn_ivf_incremental"].spark(spark, SF)
     plan = formatted_plan(q)
-    assert plan.count("ann_index_") >= 2, plan
+    assert plan.count("graft_pid") >= 2, plan
     assert "CartesianProduct" not in plan, plan

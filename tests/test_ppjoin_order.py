@@ -141,14 +141,17 @@ def test_stats_probe_cached_per_corpus_fingerprint(spark, corpus):
     of dedup_ngram_jaccard (3.52 s -> 2.19 s) rests on the prefix-order
     probe running ONCE per (corpus identity, order conf, threshold) and
     every later call — the bench's best-of-2 repeat, repeated queries in
-    a session — being served from _PPJOIN_STATS_CACHE with zero jobs.
+    a session — being served from the artifact store with zero jobs.
     Pin it structurally: after the first call populates the cache, a
     second call with the SAME key is handed a poison object that raises
     on ANY attribute access — it can only succeed via the cache."""
+    from collect_mobile_devices_datalake_spark import artifacts
+    from collect_mobile_devices_datalake_spark.artifacts import _MEMO
     from collect_mobile_devices_datalake_spark.operators.dedup import (
-        _PPJOIN_STATS_CACHE,
         ppjoin_corpus_stats,
     )
+
+    from .conftest import SF_ORACLE, SF_SMOKE
 
     class _Poison:
         def __getattr__(self, name):
@@ -158,25 +161,28 @@ def test_stats_probe_cached_per_corpus_fingerprint(spark, corpus):
                 "guarantee is broken"
             )
 
-    key = "test_ppjoin_cache_pin:deadbeef"
-    _PPJOIN_STATS_CACHE.clear()
+    key = "ppjoin_stats"
+    inputs = [(SF_SMOKE, "documents")]
+    artifacts.cleanup()
     try:
         hashed = shingled_docs(corpus).select(
             "doc_id", "n", F.transform("sh", lambda s: F.xxhash64(s)).alias("hv")
         )
-        first = ppjoin_corpus_stats(spark, hashed, cache_key=key)
-        assert any(k.startswith(key + ":") for k in _PPJOIN_STATS_CACHE)
-        second = ppjoin_corpus_stats(spark, _Poison(), cache_key=key)
+        first = ppjoin_corpus_stats(spark, hashed, inputs)
+        assert any(k.startswith(key + ":") for k in _MEMO)
+        second = ppjoin_corpus_stats(spark, _Poison(), inputs)
         assert second == first
         # a DIFFERENT corpus identity must NOT be served the stale entry
         with pytest.raises(AssertionError, match="probe touched"):
-            ppjoin_corpus_stats(spark, _Poison(), cache_key="other:cafe")
+            ppjoin_corpus_stats(
+                spark, _Poison(), [(SF_ORACLE, "documents")]
+            )
         # and a changed order conf re-probes even under the same corpus key
         spark.conf.set("spark.graft.ppjoin.prefixOrder", "df")
         try:
             with pytest.raises(AssertionError, match="probe touched"):
-                ppjoin_corpus_stats(spark, _Poison(), cache_key=key)
+                ppjoin_corpus_stats(spark, _Poison(), inputs)
         finally:
             spark.conf.set("spark.graft.ppjoin.prefixOrder", "auto")
     finally:
-        _PPJOIN_STATS_CACHE.clear()
+        artifacts.cleanup()

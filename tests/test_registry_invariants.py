@@ -47,6 +47,17 @@ def test_operator_catalog_is_fresh():
     # necessary but not sufficient: an add+remove pair keeps the count)
     missing = [n for n in REGISTRY if f"`{n}`" not in content]
     assert not missing, f"catalog rows missing (regenerate): {missing}"
+    # and every row's text (module, oracle status, doc) is current
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "gen_operators_md", "tools/gen_operators_md.py"
+    )
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    assert content == gen.render(), (
+        "docs/OPERATORS.md is stale — run tools/gen_operators_md.py"
+    )
 
 
 def test_no_driver_hostile_oracle_column_types():
@@ -83,7 +94,7 @@ def test_no_driver_hostile_oracle_column_types():
     assert not offenders, f"driver-hostile oracle column types: {offenders}"
 
 
-def test_persisted_index_isolated_per_corpus(spark):
+def test_persisted_table_isolated_per_corpus(spark):
     from collect_mobile_devices_datalake_spark.operators import similarity as S
 
     a = S.bucket_index(spark, "/root/testdata/sf0.001")

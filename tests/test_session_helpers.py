@@ -77,40 +77,40 @@ def test_table_fingerprint_detects_preserved_mtime_rewrite(tmp_path):
 
 def test_ann_index_sweep_liveness_rules(tmp_path, monkeypatch):
     """Dead-pid + aged roots go; live-pid and young roots stay; unmarked
-    roots obey the age bar — the stream-temp-root rules applied to the
+    roots are not the sweep's — the stream-temp-root rules applied to the
     persisted ANN index dirs."""
     import os
     import time
 
-    import collect_mobile_devices_datalake_spark.operators.similarity as S
+    from collect_mobile_devices_datalake_spark import artifacts
 
     monkeypatch.setattr("tempfile.gettempdir", lambda: str(tmp_path))
     old = time.time() - 7200
-    live = tmp_path / f"ann_index_pid{os.getpid()}_x"  # me: alive
-    dead_old = tmp_path / "ann_index_pid999999999_x"
-    dead_young = tmp_path / "ann_index_pid999999998_y"
+    live = tmp_path / f"graft_pid{os.getpid()}_lsh_x"  # me: alive
+    dead_old = tmp_path / "graft_pid999999999_lsh_x"
+    dead_young = tmp_path / "graft_pid999999998_lsh_y"
     unmarked_old = tmp_path / "ann_index_legacy"
     for d in (live, dead_old, dead_young, unmarked_old):
         d.mkdir()
     os.utime(live, (old, old))
     os.utime(dead_old, (old, old))
     os.utime(unmarked_old, (old, old))
-    S.sweep_stale_ann_indexes(min_age_sec=3600)
+    artifacts.sweep_stale(min_age_sec=3600)
     assert live.exists()          # alive pid, never swept inside TTL
     assert not dead_old.exists()  # dead pid + aged
     assert dead_young.exists()    # dead pid but young (recycling guard)
-    assert not unmarked_old.exists()  # legacy, age bar only
+    assert unmarked_old.exists()  # no graft_pid marker: left to the tmp cleaner
 
-    # ADVICE r12: the live-pid exemption is capped at 4x the hard TTL —
+    # ADVICE r12: the live-pid exemption is capped by the hard TTL —
     # a pid recycled by an unrelated long-lived process must not pin an
     # orphaned index dir forever
     ancient = time.time() - 10 * 86400
-    live_ancient = tmp_path / f"ann_index_pid{os.getpid()}_z"
+    live_ancient = tmp_path / f"graft_pid{os.getpid()}_lsh_z"
     live_ancient.mkdir()
     os.utime(live_ancient, (ancient, ancient))
-    S.sweep_stale_ann_indexes(min_age_sec=3600, hard_ttl_sec=2 * 86400)
+    artifacts.sweep_stale(min_age_sec=3600, hard_ttl_sec=2 * 86400)
     assert live.exists()              # alive + under the cap: stays
-    assert not live_ancient.exists()  # alive but past 4x hard TTL: goes
+    assert not live_ancient.exists()  # alive but past the hard TTL: goes
 
 
 def test_stream_temp_root_sweep_covers_every_streaming_row(
@@ -127,7 +127,7 @@ def test_stream_temp_root_sweep_covers_every_streaming_row(
 
     import pytest
 
-    import collect_mobile_devices_datalake_spark.operators.streaming_batch as SB
+    from collect_mobile_devices_datalake_spark import artifacts
     from collect_mobile_devices_datalake_spark.registry import (
         REGISTRY,
         _ensure_loaded,
@@ -163,6 +163,55 @@ def test_stream_temp_root_sweep_covers_every_streaming_row(
         os.utime(tmp_path / name, (old, old))
         os.utime(d, (old, old))
         dead.append(d)
-    SB.sweep_stale_stream_temp_roots(min_age_sec=3600)
+    artifacts.sweep_stale(min_age_sec=3600)
     assert [d.name for d in dead if d.exists()] == []  # dead pid + aged: gone
     assert sorted(os.listdir(tmp_path)) == roots  # live pid: kept
+
+
+def test_cleanup_removes_every_scratch_dir_and_rebuilds(spark, tmp_path, monkeypatch):
+    """Persisted indexes, the time-travel lake and streaming roots all
+    live in scratch dirs of one store: ``cleanup()`` leaves the temp dir
+    empty, and the next ``bucket_index`` call rebuilds its table."""
+    import os
+    import tempfile
+
+    from collect_mobile_devices_datalake_spark import artifacts
+    from collect_mobile_devices_datalake_spark.operators import similarity as S
+    from collect_mobile_devices_datalake_spark.operators import streaming_batch as SB
+    from collect_mobile_devices_datalake_spark.operators.lake_ops import (
+        _time_travel_lake,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    artifacts.cleanup()  # earlier tests' artifacts live in the real temp dir
+    n = S.bucket_index(spark, SF_SMOKE).count()
+    _time_travel_lake(spark, SF_SMOKE)
+    SB._stream_temp_root()
+    assert len(os.listdir(tmp_path)) == 3
+
+    artifacts.cleanup()
+    assert os.listdir(tmp_path) == []
+
+    again = S.bucket_index(spark, SF_SMOKE)
+    assert [d for d in os.listdir(tmp_path) if "_lsh_" in d]
+    assert again.count() == n
+    artifacts.cleanup()
+
+
+def test_bucket_udf_is_built_once_per_application():
+    """The bucket kernel is keyed by the Spark application id: a UDF
+    built under a stopped session points at that context's accumulator
+    server, so a new application must get its own."""
+    from types import SimpleNamespace
+
+    from collect_mobile_devices_datalake_spark.operators import similarity as S
+
+    def app(app_id: str):
+        return SimpleNamespace(sparkContext=SimpleNamespace(applicationId=app_id))
+
+    planes = ((0, 1, 2),)
+    a1 = S._hyperplane_buckets_udf(app("app-stub-a"), planes)
+    b = S._hyperplane_buckets_udf(app("app-stub-b"), planes)
+    a2 = S._hyperplane_buckets_udf(app("app-stub-a"), planes)
+    assert a1 is not b
+    assert a1 is a2

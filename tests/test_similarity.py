@@ -89,12 +89,12 @@ def test_index_cache_key_includes_params_and_corpus_fingerprint(tmp_path):
     import os
     import time
 
-    from collect_mobile_devices_datalake_spark.operators import similarity as S
+    from collect_mobile_devices_datalake_spark.session import table_fingerprint
 
     src = "/root/testdata/sf0.001/embeddings.parquet"
     dst = str(tmp_path / "embeddings.parquet")
     (shutil.copytree if os.path.isdir(src) else shutil.copyfile)(src, dst)
-    fp1 = S._corpus_fingerprint(str(tmp_path))
+    fp1 = table_fingerprint(str(tmp_path), "embeddings")
     # rewrite in place: bump mtime on every file of the table
     later = time.time() + 10
     targets = (
@@ -104,7 +104,7 @@ def test_index_cache_key_includes_params_and_corpus_fingerprint(tmp_path):
     )
     for p in targets:
         os.utime(p, (later, later))
-    fp2 = S._corpus_fingerprint(str(tmp_path))
+    fp2 = table_fingerprint(str(tmp_path), "embeddings")
     assert fp1 != fp2, "fingerprint must change when the corpus is rewritten"
 
 
@@ -112,7 +112,7 @@ def test_index_cache_distinguishes_algorithm_params(spark):
     # two callers with the same kind+corpus but different params must get
     # separate builds — reverting the key composition to kind+corpus only
     # would hand the k16 caller the cached k8 index
-    from collect_mobile_devices_datalake_spark.operators import similarity as S
+    from collect_mobile_devices_datalake_spark import artifacts
 
     calls = []
 
@@ -124,9 +124,10 @@ def test_index_cache_distinguishes_algorithm_params(spark):
         calls.append("b")
         return spark.range(2).selectExpr("id AS v")
 
-    a1 = S._persisted_index(spark, "testkind", SF, "k8", build_a)
-    b1 = S._persisted_index(spark, "testkind", SF, "k16", build_b)
-    a2 = S._persisted_index(spark, "testkind", SF, "k8", build_a)
+    emb = [(SF, "embeddings")]
+    a1 = artifacts.persisted_table(spark, "testkind", "k8", emb, build_a)
+    b1 = artifacts.persisted_table(spark, "testkind", "k16", emb, build_b)
+    a2 = artifacts.persisted_table(spark, "testkind", "k8", emb, build_a)
     assert calls == ["a", "b"], "params must be part of the cache key"
     assert a1.count() == 1 and b1.count() == 2 and a2.count() == 1
 
@@ -336,8 +337,8 @@ def test_lsh_incremental_equals_full_rebuild_and_never_rewrites_base(spark):
     rebuilding it."""
     import os
 
+    from collect_mobile_devices_datalake_spark.artifacts import _MEMO
     from collect_mobile_devices_datalake_spark.operators.similarity import (
-        _INDEX_CACHE,
         lsh_base_delta_indexes,
     )
 
@@ -353,7 +354,7 @@ def test_lsh_incremental_equals_full_rebuild_and_never_rewrites_base(spark):
     # the maintenance property: a second derivation reuses the persisted
     # base shard byte-for-byte (the cache key includes the corpus
     # fingerprint, so only an actual append would mint a new delta)
-    base_paths = [p for k, p in _INDEX_CACHE.items() if k.startswith("lshbase:")]
+    base_paths = [p for k, p in _MEMO.items() if k.startswith("lshbase:")]
     assert base_paths, "base shard not persisted"
     before = {p: os.path.getmtime(p) for p in base_paths}
     lsh_base_delta_indexes(spark, SF)
@@ -371,8 +372,8 @@ def test_ivf_incremental_frozen_quantizer_and_base_shard_reuse(spark):
 
     from pyspark.sql import functions as F
 
+    from collect_mobile_devices_datalake_spark.artifacts import _MEMO
     from collect_mobile_devices_datalake_spark.operators.similarity import (
-        _INDEX_CACHE,
         ivf_assignment,
         kmeans_centroids,
     )
@@ -395,7 +396,7 @@ def test_ivf_incremental_frozen_quantizer_and_base_shard_reuse(spark):
     }
     assert a == b and len(a) > 0
 
-    base_paths = [p for k, p in _INDEX_CACHE.items() if k.startswith("ivfbase:")]
+    base_paths = [p for k, p in _MEMO.items() if k.startswith("ivfbase:")]
     assert base_paths
     before = {p: os.path.getmtime(p) for p in base_paths}
     REGISTRY["knn_ivf_incremental"].spark(spark, SF).count()

@@ -17,7 +17,10 @@ from collect_mobile_devices_datalake_spark.registry import (  # noqa: E402
 )
 
 
-def main() -> None:
+def render() -> str:
+    """The catalog text: one row per registered query, ordered by module
+    and then name, so the file changes only when an operator does (not
+    when the registry's rotation order moves)."""
     _ensure_loaded()
     lines = [
         "# Operator / query catalog",
@@ -27,21 +30,27 @@ def main() -> None:
         f"{len(REGISTRY)} registered queries; every entry is exposed through "
         "`__spark_entry__.queries()` and (when `oracle` is ✓) value-checked "
         "against its DuckDB twin by `tests/test_oracle_parity.py` and the "
-        "driver gate. Registration order = driver sample priority "
-        "(`registry._DRIVER_PRIORITY`).",
+        "driver gate. Rows are ordered by module, then query name.",
         "",
         "| # | query | module | oracle | doc |",
         "|---|-------|--------|--------|-----|",
     ]
-    for i, (name, spec) in enumerate(REGISTRY.items(), 1):
-        mod = spec.spark.__module__.rsplit(".", 1)[-1]
+    rows = sorted(
+        (spec.spark.__module__.rsplit(".", 1)[-1], name, spec)
+        for name, spec in REGISTRY.items()
+    )
+    for i, (mod, name, spec) in enumerate(rows, 1):
         doc = " ".join((spec.doc or "").split())
         if len(doc) > 160:
             doc = doc[:157] + "..."
         oracle = "✓" if spec.oracle else "rows-only"
         lines.append(f"| {i} | `{name}` | {mod} | {oracle} | {doc} |")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
     with open("docs/OPERATORS.md", "w") as f:
-        f.write("\n".join(lines) + "\n")
+        f.write(render())
     print(f"wrote docs/OPERATORS.md ({len(REGISTRY)} queries)")
 
 

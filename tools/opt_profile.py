@@ -64,9 +64,12 @@ def main() -> None:
     for t in TABLES:
         load_table(spark, t, sf_dir).count()
 
+    from collect_mobile_devices_datalake_spark import artifacts
     from collect_mobile_devices_datalake_spark.operators.streaming_batch import (
         cleanup_stream_temp_roots,
     )
+
+    artifacts.sweep_stale()
 
     os.makedirs("plans/r15", exist_ok=True)
     results: dict[str, dict] = {}

@@ -57,12 +57,12 @@ def main() -> None:
         cal = min(cal, time.perf_counter() - t0)
     fscal = bench.fs_calibration_sec(runs)
 
+    from collect_mobile_devices_datalake_spark import artifacts
     from collect_mobile_devices_datalake_spark.operators.streaming_batch import (
         cleanup_stream_temp_roots,
-        sweep_stale_stream_temp_roots,
     )
 
-    sweep_stale_stream_temp_roots()
+    artifacts.sweep_stale()
     rows: dict[str, float] = {}
     for name in keys:
         spec = REGISTRY[name]
