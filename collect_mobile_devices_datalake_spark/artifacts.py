@@ -26,7 +26,7 @@ from typing import Callable, Iterable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .session import table_fingerprint
+from .session import read_parquet, table_fingerprint
 
 T = TypeVar("T")
 
@@ -78,7 +78,7 @@ def persisted_table(
         build().write.mode("overwrite").parquet(path)
         return path
 
-    return spark.read.parquet(get_or_build(spark, kind, params, inputs, write))
+    return read_parquet(spark, get_or_build(spark, kind, params, inputs, write))
 
 
 def _pid_alive(pid: int) -> bool:

@@ -48,6 +48,8 @@ from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import read_parquet
+
 MANIFEST_DIR = "_manifests"
 
 
@@ -230,7 +232,7 @@ def read_committed(
                 f"no committed files under {table_prefix!r} and no schema given"
             )
         return spark.createDataFrame([], schema).limit(0)
-    return spark.read.parquet(*files)
+    return read_parquet(spark, *files)
 
 
 def vacuum_orphans(
@@ -342,7 +344,7 @@ def rewrite_table(
     olds = committed_files(lake_dir, table)
     if len(olds) <= target_files and not sort_cols:
         return None
-    df = spark.read.parquet(*olds)
+    df = read_parquet(spark, *olds)
     if sort_cols:
         # clustered rewrite: co-locate rows by the given key(s) so the
         # rewritten files' min/max zone maps prune scans (the executor

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from .. import artifacts
 from ..registry import register
-from ..session import load_table
+from ..session import load_table, parquet_rows, read_parquet
 from ..streaming import lattice
 from .relational import dsum
 
@@ -67,9 +67,7 @@ def _data_sized_width(spark: SparkSession, src: str):
     # aqe_off=False: the streaming guard rows measured the width-1
     # AQE-off variant as noise-level at best (r15 A/B), and these rows
     # are gate-guarded — keep the engine's adaptive plans for them
-    return scoped_shuffle_width(
-        spark, spark.read.parquet(src).count(), aqe_off=False
-    )
+    return scoped_shuffle_width(spark, parquet_rows(spark, src), aqe_off=False)
 
 
 def cleanup_stream_temp_roots() -> None:
@@ -859,7 +857,7 @@ def q_streaming_rollup_day_grain(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         with _data_sized_width(spark, src):
             run(100)
-            max_ts = spark.read.parquet(src).agg(F.max("ts")).collect()[0][0]
+            max_ts = read_parquet(spark, src).agg(F.max("ts")).collect()[0][0]
             # sentinel #1 closes every real hour/day; #2 finalizes #1's
             # own hour so the derived frontier passes every real bucket.
             # Both land in ONE restarted micro-batch (r12 trim, was one

@@ -176,9 +176,11 @@ def _one_merge(syms: DataFrame):
 def _initial_symbol_arrays(types: DataFrame, wp: bool = False) -> DataFrame:
     """(word, freq, a): each word type's initial symbol sequence as an
     array — plain characters for BPE, '##'-marked word-internal
-    characters for WordPiece. Empty arrays (an empty-string word type,
-    possible on whitespace-only documents) are dropped, matching the
-    row form where ``posexplode`` emits no rows for them."""
+    characters for WordPiece. An empty-string word type (possible on
+    whitespace-only documents) is kept: ``split('', '')`` yields
+    ``['']``, one empty symbol, as in the ``posexplode`` row form. The
+    ``size >= 1`` filter is defensive only: ``_word_types`` never emits
+    a NULL word, the one input whose split has no symbols."""
     ch = F.split("word", "")
     if wp:
         a = F.transform(
@@ -223,10 +225,11 @@ def _greedy_merge_col(a, left: str, right: str, merged: str):
     )
 
     def step(st, i):
-        hit = (
-            (i < F.size(a))
-            & (F.element_at(a, i) == F.lit(left))
-            & (F.element_at(a, i + 1) == F.lit(right))
+        # try_element_at: at the last symbol a[i + 1] is past the end;
+        # its NULL makes hit NULL (not taken) under ANSI mode, with no
+        # reliance on the order in which And evaluates its operands
+        hit = (F.try_element_at(a, i) == F.lit(left)) & (
+            F.try_element_at(a, i + 1) == F.lit(right)
         )
         return (
             F.when(

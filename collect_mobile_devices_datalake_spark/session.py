@@ -1,16 +1,27 @@
-"""SparkSession factory + table registry.
+"""SparkSession factory, table registry and the package's parquet reads.
 
 The session is tuned for the local[32] test harness but every knob is the
 one you would set on a real cluster: AQE on (runtime re-plan, skew-join
 splitting, partition coalescing), Arrow on (vectorized pandas-UDF edge),
 sane shuffle-partition default that AQE then right-sizes.
+
+Every parquet read in the package goes through ``read_parquet`` or
+``load_table``, and both hand Spark the schema: a schemaless
+``spark.read.parquet`` runs a Spark job just to read one footer back.
+``read_parquet`` takes the schema Spark itself wrote into the footer of
+the first data file; ``load_table`` infers an input table's schema once
+per table content and session and reuses it. ``parquet_rows`` answers
+"how many rows did we just write" from the footers, also without a job.
 """
 
 from __future__ import annotations
 
+import json
 import os
+from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -48,9 +59,15 @@ def get_spark(app_name: str = "collect-mobile-devices-datalake-spark", *, shuffl
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
     """Read one driver-generated parquet table.
 
-    Plain ``spark.read.parquet`` keeps predicate pushdown + column pruning
+    The input tables are written by pyarrow, so their footers carry no
+    Spark schema: the schema Spark infers for a table (one job) is
+    memoized in the artifact store, keyed by the table's content
+    fingerprint and the application id, and every read hands it to the
+    reader. The memo holds metadata only; each read still lists and
+    scans the files, keeping predicate pushdown + column pruning
     available to every downstream plan (check ``PushedFilters`` /
-    ``ReadSchema`` in ``.explain``).
+    ``ReadSchema`` in ``.explain``). A missing table still fails with
+    Spark's own ``PATH_NOT_FOUND``.
     """
     # The driver / an embedding app may hand us a vanilla SparkSession that
     # was NOT built by get_spark, so the nanos conf must be (re)applied at
@@ -59,7 +76,17 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if os.path.exists(path):
+        from . import artifacts
+
+        schema = artifacts.get_or_build(
+            spark, "table_schema", name, [(sf_dir, name)],
+            lambda: spark.read.parquet(path).schema,
+        )
+        df = spark.read.schema(schema).parquet(path)
+    else:  # missing (Spark raises PATH_NOT_FOUND) or not on this disk
+        df = spark.read.parquet(path)
     # TIMESTAMP(NANOS) columns arrive as nanos-since-epoch longs (see
     # nanosAsLong in get_spark); truncate to micros exactly like DuckDB does.
     from pyspark.sql import functions as F
@@ -68,6 +95,64 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
     return df
+
+
+def _data_files(path: str) -> Iterator[str]:
+    """The parquet data files under ``path`` on the driver's disk, in
+    sorted order, skipping the ``_``/``.``-prefixed names Spark's file
+    index skips (``_SUCCESS``, ``_staging_*``, ``.crc``). A file is its
+    own listing; a missing path lists nothing."""
+    if os.path.isfile(path):
+        yield path
+        return
+    for dirpath, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for f in sorted(files):
+            if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                yield os.path.join(dirpath, f)
+
+
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema Spark wrote into the footer of ``path``'s first data
+    file — the footer key Spark's own inference reads when
+    ``mergeSchema`` is off. None when there is no such file or key."""
+    if spark.conf.get("spark.sql.parquet.mergeSchema", "false") == "true":
+        return None
+    first = next(_data_files(path), None)
+    if first is None:  # nothing there, or not on the driver's disk
+        return None
+    import pyarrow.parquet as pq
+
+    try:
+        raw = (pq.read_metadata(first).metadata or {}).get(_SPARK_SCHEMA_KEY)
+        return None if raw is None else StructType.fromJson(json.loads(raw))
+    except Exception:  # unreadable footer: Spark's read reports it
+        return None
+
+
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """``spark.read.parquet(*paths)`` with the schema taken from the
+    first path's footer, so no Spark job runs to infer it. Paths with no
+    local data file, or files without Spark's schema key, are read
+    plainly, which keeps Spark's own inference and errors."""
+    schema = _footer_schema(spark, paths[0])
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
+
+
+def parquet_rows(spark: SparkSession, path: str) -> int:
+    """Rows of the parquet data under ``path``: the sum of its footers'
+    row counts, read on the driver with no Spark job. A missing path or
+    one with no data file holds 0 rows; a path not on this disk is
+    counted by Spark."""
+    if "://" in path or path.startswith("file:"):
+        return read_parquet(spark, path).count()
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in _data_files(path))
 
 
 def fan_out(df: DataFrame, *keys: str) -> DataFrame:

@@ -23,6 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from ..session import read_parquet
 from .fsutil import dir_has_parquet, list_batch_dirs
 
 DOCS_SCHEMA = "doc_id bigint, text string"
@@ -54,7 +55,7 @@ def _maintain_batch(matches_dir: str, sf_dir: str):
             and dir_has_parquet(spark_b, os.path.join(matches_dir, d))
         ]
         if others:
-            existing = spark_b.read.parquet(*others).select(
+            existing = read_parquet(spark_b, *others).select(
                 "new_doc"
             ).distinct()
             matches = matches.join(existing, "new_doc", "left_anti")

@@ -19,6 +19,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from ..session import read_parquet
 from .fsutil import dir_has_parquet, list_batch_dirs
 
 VECTORS_SCHEMA = "vec_id bigint, embedding array<float>"
@@ -53,7 +54,7 @@ def _maintain_batch(graph_dir: str, sf_dir: str):
             and dir_has_parquet(spark_b, os.path.join(graph_dir, d))
         ]
         if others:
-            existing = spark_b.read.parquet(*others).select("src").distinct()
+            existing = read_parquet(spark_b, *others).select("src").distinct()
             edges = edges.join(existing, "src", "left_anti")
         edges.write.mode("overwrite").parquet(
             os.path.join(graph_dir, f"batch={batch_id}")

@@ -68,6 +68,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from ..session import read_parquet
 from .fsutil import (
     delete_dir,
     dir_has_parquet,
@@ -170,7 +171,7 @@ def read_state(
         out = spark.createDataFrame([], family.empty_schema)
     else:
         fold = family.read_fold_fn or family.fold_fn
-        out = fold(spark.read.parquet(*parts))
+        out = fold(read_parquet(spark, *parts))
     return family.read_post(out) if family.read_post else out
 
 
@@ -193,7 +194,7 @@ def compact_state(
         if not inputs:
             return
         merged = family.fold_fn(
-            spark.read.parquet(*[os.path.join(state_dir, d) for d in inputs])
+            read_parquet(spark, *[os.path.join(state_dir, d) for d in inputs])
         )
         if "batch=compacted" in olds:
             # re-compaction overwrites a dir the fold still reads — only
@@ -233,7 +234,7 @@ def compact_state(
     # batch=c<gen+1> dir that is never in `live`, so the write job
     # streams the fold straight from the input partitions it reads
     merged = family.fold_fn(
-        spark.read.parquet(*[os.path.join(state_dir, d) for d in live])
+        read_parquet(spark, *[os.path.join(state_dir, d) for d in live])
     )
     gens = [
         int(d[len("batch=c"):])

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..session import read_parquet
+
 EVENTS_SCHEMA = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
     "value double, props string"
@@ -52,7 +54,7 @@ def _upsert_batch(lake_dir: str, source: str) -> Callable[[DataFrame, int], None
         # silently downgrade effectively-once to at-least-once.
         files = manifest.committed_files(lake_dir, table)
         if files:
-            existing = batch.sparkSession.read.parquet(*files).select("src_url")
+            existing = read_parquet(batch.sparkSession, *files).select("src_url")
             fresh = records.join(existing, "src_url", "left_anti")
         else:
             fresh = records

@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..session import parquet_rows, read_parquet
+
 WATERMARK = "1 hour"
 
 
@@ -87,7 +89,7 @@ def _maintain_derived_grains(spark: SparkSession, rollup_dir: str, derived_dir: 
     """
     from ..ingest import manifest
 
-    hourly = spark.read.parquet(rollup_dir)
+    hourly = read_parquet(spark, rollup_dir)
     frontier = hourly.agg(F.max("bucket_start")).collect()[0][0]
     if frontier is None:
         return
@@ -154,17 +156,13 @@ def _write_finalized(rollup_dir: str, derived_dir: str | None = None):
             # move the day/month frontier — every derived row aggregates
             # emitted hourly rows, so the maintenance pass over an empty
             # emission is a ~6-job no-op. Probe the JUST-WRITTEN partition
-            # (a footer-only read) instead of batch.isEmpty(), which
-            # would re-execute the stateful plan a second time.
-            if spark_is_empty_parquet(batch.sparkSession, part):
+            # (its footers' row counts, no job) instead of batch.isEmpty(),
+            # which would re-execute the stateful plan a second time.
+            if parquet_rows(batch.sparkSession, part) == 0:
                 return
             _maintain_derived_grains(batch.sparkSession, rollup_dir, derived_dir, batch_id)
 
     return fn
-
-
-def spark_is_empty_parquet(spark: SparkSession, path: str) -> bool:
-    return spark.read.parquet(path).isEmpty()
 
 
 def read_grain(spark: SparkSession, rollup_dir: str, derived_dir: str, grain: str) -> DataFrame:
@@ -174,7 +172,7 @@ def read_grain(spark: SparkSession, rollup_dir: str, derived_dir: str, grain: st
     from ..ingest import manifest
 
     if grain == "hour":
-        return spark.read.parquet(rollup_dir)
+        return read_parquet(spark, rollup_dir)
     return manifest.read_committed(spark, derived_dir, grain, schema=DERIVED_SCHEMA)
 
 

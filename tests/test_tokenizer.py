@@ -184,6 +184,42 @@ def test_array_loop_equals_reference_forms(spark):
     )
 
 
+def test_greedy_merge_fold_is_ansi_safe_at_the_last_symbol(spark):
+    """A word whose LAST symbol equals the rule's left side makes the
+    fold look one past the end (a[i + 1]); under ANSI mode that lookup
+    must not raise, and the fold must still agree with a plain Python
+    greedy left-to-right merge."""
+    from collect_mobile_devices_datalake_spark.operators.tokenizer import (
+        _greedy_merge_col,
+    )
+
+    def greedy(syms, left, right):
+        out, i = [], 0
+        while i < len(syms):
+            if i + 1 < len(syms) and (syms[i], syms[i + 1]) == (left, right):
+                out.append(left + right)
+                i += 2
+            else:
+                out.append(syms[i])
+                i += 1
+        return out
+
+    words = [list("aba"), list("ba"), list("a"), list("abab"), list("aaa")]
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        for left, right in (("a", "b"), ("a", "a")):
+            got = [
+                r.out
+                for r in spark.createDataFrame([(w,) for w in words], "a array<string>")
+                .select(_greedy_merge_col(F.col("a"), left, right, left + right).alias("out"))
+                .collect()
+            ]
+            assert got == [greedy(w, left, right) for w in words]
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+
+
 def test_unigram_lm_dp_is_optimal_vs_bruteforce(spark):
     """Independent check of the Viterbi DP: exhaustively enumerate every
     segmentation of every word (<= 2^(len-1) splits, len <= 8) in Python
