@@ -73,6 +73,14 @@ def manifest_paths(lake_dir: str) -> list[str]:
     )
 
 
+def _next_seq(lake_dir: str) -> int:
+    """1 + the highest committed seq, parsed from the manifest names —
+    never a count: `compact_manifests` leaves fewer manifests than the
+    seqs it folded, and a count would sort the next commit before them."""
+    paths = manifest_paths(lake_dir)
+    return 1 + int(os.path.basename(paths[-1]).split("-", 1)[0]) if paths else 0
+
+
 def committed(lake_dir: str, txn_id: str) -> bool:
     """Has ``txn_id`` been published? (txn id is part of the file name,
     so this is a directory listing, not N file reads.)"""
@@ -124,7 +132,7 @@ def publish(
         return None
     root = _manifest_root(lake_dir)
     os.makedirs(root, exist_ok=True)
-    seq = len(manifest_paths(lake_dir))
+    seq = _next_seq(lake_dir)
     body = {
         "txn_id": txn_id,
         "tables": tables,

@@ -38,3 +38,13 @@ def jobs_in_group(spark, group: str, action) -> int:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def compilations(spark, action) -> int:
+    """Generated classes Janino compiled while ``action()`` ran: the
+    JVM-wide count of codegen compiles, which a hit in Spark's
+    generated-class cache does not bump."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    action()
+    return metrics.METRIC_COMPILATION_TIME().getCount() - before

@@ -256,6 +256,29 @@ def test_compaction_folds_history_and_stale_pins_fail(spark, lake):
     assert manifest.read_committed(spark, lake, "t", as_of=merged_txn).count() == 6
 
 
+def test_commit_after_compaction_sequences_after_the_merged_manifest(spark, lake):
+    """The next seq is 1 + the highest committed seq, not the manifest
+    count: after compaction folds three commits into one, a new commit
+    still sorts after the merged manifest, so its pin sees the whole
+    table and a later rewrite's removes apply after the files they
+    remove were added. With the manifest count as the seq, the new
+    commit sorted first: 10 rows as of it, and 70 rows (40 distinct)
+    after the rewrite."""
+    for i in range(3):
+        df = spark.range(i * 10, i * 10 + 10).select(F.col("id").cast("string").alias("url"))
+        manifest.commit_tables(lake, [("t", df)], txn_id=f"txn{i}")
+    assert manifest.compact_manifests(lake) is not None
+    df = spark.range(30, 40).select(F.col("id").cast("string").alias("url"))
+    manifest.commit_tables(lake, [("t", df)], txn_id="txn3")
+
+    assert manifest.read_committed(spark, lake, "t", as_of="txn3").count() == 40
+    assert manifest.snapshots(lake)[-1]["txn_id"] == "txn3"
+
+    assert manifest.rewrite_table(spark, lake, "t", target_files=1) is not None
+    got = manifest.read_committed(spark, lake, "t")
+    assert got.count() == 40 and got.distinct().count() == 40
+
+
 def test_rewrite_table_folds_small_files_atomically(spark, lake):
     """OPTIMIZE: the rewrite txn swaps N small files for 1 large one
     with content identical; pre-rewrite pins still resolve the old
