@@ -22,11 +22,15 @@ from .. import artifacts
 from ..functions.text import rolling_hash
 from ..registry import register
 from ..session import fan_out, load_table
+from ..streaming.lattice import LatticeFamily
 
 P = 1_000_000_007
 NUM_PERM = 16
 BANDS = 4
 ROWS_PER_BAND = NUM_PERM // BANDS
+# auto prefix order flips to df order when some shingle sits in at least
+# this share of the documents (ppjoin_ordered_arrays)
+PPJOIN_DF_HEAD_THRESHOLD = 0.02
 
 # --- shared DuckDB fragments -------------------------------------------------
 
@@ -182,21 +186,21 @@ def ppjoin_corpus_stats(
 
     Mode comes from ``spark.graft.ppjoin.prefixOrder`` (auto = probe the
     df head on a deterministic 1-in-8 doc sample — a head shingle by
-    definition sits in >= thr of ALL docs, so its sample df tracks
-    thr * sample size; the full-corpus probe once cost ~20% of the whole
-    query's wall time at sf0.1). The probe only picks a PLAN — the
-    order-equivalence test pins that the choice cannot change results —
-    which is what licenses both the sampling and the caching.
+    definition sits in >= ``PPJOIN_DF_HEAD_THRESHOLD`` of ALL docs, so
+    its sample df tracks that share of the sample size; the full-corpus
+    probe once cost ~20% of the whole query's wall time at sf0.1). The
+    probe only picks a PLAN — the order-equivalence test pins that the
+    choice cannot change results — which is what licenses both the
+    sampling and the caching.
 
     With ``inputs`` (the corpus's ``(sf_dir, table)``) the pair is built
-    once per corpus bytes, order conf and threshold
+    once per corpus bytes and order conf
     (``artifacts.get_or_build``): the first run per corpus pays the 3
     probe jobs, every later run (bench best-of-2, repeated queries in a
     session, the verify-broadcast gate) pays zero. At 100 TB both numbers
     come from catalog statistics / the maintained shingle-df table.
     """
     mode_conf = spark.conf.get("spark.graft.ppjoin.prefixOrder", "auto")
-    thr = float(spark.conf.get("spark.graft.ppjoin.dfHeadThreshold", "0.02"))
 
     def build() -> tuple[str, int]:
         n_total = hashed.count()
@@ -207,16 +211,15 @@ def ppjoin_corpus_stats(
                 probe, n_probe = hashed, n_total
             post = probe.select(F.explode("hv").alias("h"))
             max_df = post.groupBy("h").count().agg(F.max("count")).collect()[0][0] or 0
-            mode = "df" if n_probe and max_df >= thr * n_probe else "hash"
+            head = max_df >= PPJOIN_DF_HEAD_THRESHOLD * n_probe
+            mode = "df" if n_probe and head else "hash"
         else:
             mode = mode_conf
         return mode, n_total
 
     if inputs is None:
         return build()
-    return artifacts.get_or_build(
-        spark, "ppjoin_stats", f"{mode_conf}:{thr}", inputs, build
-    )
+    return artifacts.get_or_build(spark, "ppjoin_stats", mode_conf, inputs, build)
 
 
 def ppjoin_ordered_arrays(
@@ -245,11 +248,11 @@ def ppjoin_ordered_arrays(
       df aggregation (8-byte keys, map-side combine) + posting join +
       per-doc regroup.
     - ``auto`` (default): flip to df order when max_df >= n_docs *
-      ``spark.graft.ppjoin.dfHeadThreshold`` (default 0.02) — i.e. some
-      shingle sits in >= 2% of documents. The stats probe is one
-      aggregation over the checkpointed hash arrays; at 100 TB the same
-      number comes free from the shingle-df table the pipeline already
-      maintains for TF-IDF. Pinned by the planted-stopword-head test
+      ``PPJOIN_DF_HEAD_THRESHOLD`` (0.02) — i.e. some shingle sits in
+      >= 2% of documents. The stats probe is one aggregation over the
+      checkpointed hash arrays; at 100 TB the same number comes free
+      from the shingle-df table the pipeline already maintains for
+      TF-IDF. Pinned by the planted-stopword-head test
       (tests/test_dedup.py): hash-order candidates blow up quadratically,
       df-order stays bounded, results identical.
 
@@ -372,19 +375,10 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both verify joins collapse to broadcast hash joins instead of
     # shuffling the candidate pairs twice. Past the row guard (corpus
     # scale) the joins shuffle on doc id, which is the right plan there.
-    # `spark.graft.ppjoin.verifyBroadcast` = on|off skips the gate when
-    # the deployment already knows its corpus scale (the 100 TB setting
-    # is "off"); default "auto" keeps the count gate.
-    vb = spark.conf.get("spark.graft.ppjoin.verifyBroadcast", "auto")
-    if vb == "on":
-        small = True
-    elif vb == "off":
-        small = False
-    else:
-        _mode, n_docs = ppjoin_corpus_stats(
-            spark, ordered.withColumnRenamed("hs", "hv"), inputs
-        )
-        small = n_docs <= 100_000
+    _mode, n_docs = ppjoin_corpus_stats(
+        spark, ordered.withColumnRenamed("hs", "hv"), inputs
+    )
+    small = n_docs <= 100_000
     maybe_b = F.broadcast if small else (lambda df: df)
     left = ordered.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"), F.col("hs").alias("ha"))
     right = ordered.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"), F.col("hs").alias("hb"))
@@ -704,9 +698,9 @@ def ppjoin_best_match(
     """R×S PPJoin at τ=0.5: each new doc's best corpus match (if any).
 
     Shared by the registered ``dedup_incremental`` query and the
-    streaming maintenance loop (streaming/dedup_maintenance.py). The
-    integer-exact size/position filters (``3x >= na+nb``) encode τ=0.5 —
-    the fixed threshold of both call sites.
+    streaming ``dedup_matches_family``. The integer-exact size/position
+    filters (``3x >= na+nb``) encode τ=0.5 — the fixed threshold of both
+    call sites.
     """
     from pyspark.sql.window import Window
 
@@ -735,16 +729,8 @@ def ppjoin_best_match(
         .select(F.col("a.doc_id").alias("new_doc"), F.col("b.doc_id").alias("dup_of"))
         .distinct()
     )
-    # same conf knob as dedup_ngram_jaccard: on|off skips the probe jobs
-    vb = new_ordered.sparkSession.conf.get(
-        "spark.graft.ppjoin.verifyBroadcast", "auto"
-    )
-    if vb == "on":
-        small = True
-    elif vb == "off":
-        small = False
-    else:
-        small = (new_ordered.count() + corpus_ordered.count()) <= 100_000
+    # same broadcast gate as dedup_ngram_jaccard
+    small = (new_ordered.count() + corpus_ordered.count()) <= 100_000
     maybe_b = F.broadcast if small else (lambda df: df)
     left = new_ordered.select(
         F.col("doc_id").alias("new_doc"), F.col("n").alias("na"), F.col("hs").alias("ha")
@@ -769,6 +755,34 @@ def ppjoin_best_match(
         verified.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") == 1)
         .select("new_doc", "dup_of", F.round("j", 6).alias("jaccard"))
+    )
+
+
+def incremental_matches_for_batch(
+    spark: SparkSession, sf_dir: str, batch: DataFrame
+) -> DataFrame:
+    """(new_doc, dup_of, jaccard) for a batch of arriving documents
+    against the persisted corpus — per-new-doc independent, so any
+    chunking of the arrivals yields the same union of matches."""
+    corpus = ordered_shingle_hashes(load_table(spark, "documents", sf_dir))
+    return ppjoin_best_match(ordered_shingle_hashes(batch), corpus)
+
+
+def dedup_matches_family(sf_dir: str) -> LatticeFamily:
+    """Streaming corpus ingestion with incremental near-dup detection
+    against the corpus at ``sf_dir``: arriving documents become their
+    best corpus match. Against the fixed corpus a doc's match depends on
+    that doc alone, so the fold is a DISTINCT union (idempotent G-set):
+    a re-delivered doc yields identical rows and the fold absorbs
+    them."""
+    return LatticeFamily(
+        name="dedup",
+        source_schema="doc_id bigint, text string",
+        partial_fn=lambda b: incremental_matches_for_batch(
+            b.sparkSession, sf_dir, b
+        ),
+        fold_fn=lambda u: u.distinct(),
+        empty_schema="new_doc bigint, dup_of bigint, jaccard double",
     )
 
 

@@ -17,6 +17,7 @@ from .. import artifacts
 from ..functions.vectors import cosine_similarity
 from ..registry import register
 from ..session import fan_out, load_table
+from ..streaming.lattice import LatticeFamily
 
 N_PLANES = 12
 QUERY_MOD = 25  # vec_id % 25 == 0 → 20 query vectors over the 500-row table
@@ -2305,17 +2306,23 @@ def q_nsw_graph_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def nsw_edges_for_batch(spark: SparkSession, sf_dir: str, batch: DataFrame) -> DataFrame:
     """Graph edges for a batch of NEW vectors (vec_id, embedding) against
-    the persisted corpus bucket index — the foreachBatch kernel of the
-    streaming maintenance loop (streaming/graph_maintenance.py).
+    the persisted corpus bucket index — the partial of the streaming
+    ``nsw_edges_family``.
 
     The batch is hashed map-side with the same deterministic hyperplanes
     the index was built with, multiprobed (Hamming-1), joined to the
     persisted index for candidates, exact-cosined against corpus vectors,
     and truncated to top-``NSW_M`` — identical math to ``nsw_graph_delta``
     (a test pins batch-streamed edges == the registered delta query).
+    Each src's edges depend only on its own vector and the fixed corpus,
+    so any chunking of the arrivals yields the same union of edges.
     """
     from ..functions.vectors import dot_product, l2_norm
 
+    # one row per vec_id: a re-delivered file in the same micro-batch
+    # would otherwise double every (src, dst) pair and fill the top-M
+    # with repeats
+    batch = batch.dropDuplicates(["vec_id"])
     idx = bucket_index(spark, sf_dir)
     emb = fan_out(load_table(spark, "embeddings", sf_dir), "vec_id")
     bk = batch.select(
@@ -2369,6 +2376,22 @@ def nsw_edges_for_batch(spark: SparkSession, sf_dir: str, batch: DataFrame) -> D
         scored.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= NSW_M)
         .select("src", "dst", "rk")
+    )
+
+
+def nsw_edges_family(sf_dir: str) -> LatticeFamily:
+    """Streaming NSW-graph maintenance over the corpus at ``sf_dir``:
+    arriving vectors become their top-M edges. Against the fixed corpus
+    a vector's edges depend on that vector alone, so the fold is a
+    DISTINCT union (idempotent G-set, the LSH-index class): a
+    re-delivered vector yields identical rows and the fold absorbs
+    them."""
+    return LatticeFamily(
+        name="graph",
+        source_schema="vec_id bigint, embedding array<float>",
+        partial_fn=lambda b: nsw_edges_for_batch(b.sparkSession, sf_dir, b),
+        fold_fn=lambda u: u.distinct(),
+        empty_schema="src bigint, dst bigint, rk int",
     )
 
 

@@ -1,10 +1,12 @@
 """Event-time window semantics over ``events``, batch-checkable (M4).
 
-These run the exact expressions the streaming pipeline uses
-(``streaming/windows.py`` shares them) but in batch mode so the DuckDB
-oracle can verify the semantics: tumbling/sliding via ``window()``,
-sessionization via ``session_window()`` (oracled with a gaps-and-islands
-rewrite).
+The tumbling, sliding and session rows are the ``streaming/windows.py``
+builders applied to the static ``events`` table (the optimizer drops
+their watermark on a batch frame), so the DuckDB oracle checks the code
+the streams run: tumbling/sliding via ``window()``, sessionization via
+``session_window()`` (oracled with a gaps-and-islands rewrite). The
+``streaming_*`` guard rows run the lattice families through real
+availableNow streams.
 """
 
 from __future__ import annotations
@@ -16,6 +18,11 @@ from .. import artifacts
 from ..registry import register
 from ..session import load_table, parquet_rows, read_parquet
 from ..streaming import lattice
+from ..streaming.windows import (
+    sessionized_stream,
+    sliding_counts_stream,
+    tumbling_counts_stream,
+)
 from .relational import dsum
 
 
@@ -32,7 +39,6 @@ def _await_or_fail(q, timeout: int = 300) -> None:
             f"streaming maintenance query did not finish within {timeout}s"
         )
 
-SESSION_GAP = "30 minutes"
 
 # Temp roots created by the streaming maintenance kernels below. Each
 # kernel copies its input table into a throwaway source dir and writes
@@ -126,19 +132,7 @@ def _lattice_guard(
     doc="Tumbling 1h event-time windows (window() in streaming; identical grouping here).",
 )
 def q_events_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, "events", sf_dir)
-    w = F.window("ts", "1 hour")
-    return (
-        e.groupBy(w, "event_type")
-        .agg(F.count("*").alias("n_events"), dsum("value").alias("total_value"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
+    return tumbling_counts_stream(load_table(spark, "events", sf_dir))
 
 
 @register(
@@ -157,18 +151,7 @@ def q_events_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Sliding windows (2h length, 1h slide): each event lands in 2 windows.",
 )
 def q_events_sliding_2h_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, "events", sf_dir)
-    w = F.window("ts", "2 hours", "1 hour")
-    return (
-        e.groupBy(w)
-        .agg(F.count("*").alias("n_events"), dsum("value").alias("total_value"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            "n_events",
-            "total_value",
-        )
-    )
+    return sliding_counts_stream(load_table(spark, "events", sf_dir))
 
 
 @register(
@@ -195,18 +178,7 @@ def q_events_sliding_2h_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     "gaps-and-islands in the oracle.",
 )
 def q_events_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, "events", sf_dir)
-    return (
-        e.groupBy(F.session_window("ts", SESSION_GAP), "user_id")
-        .agg(F.count("*").alias("n_events"), dsum("value").alias("total_value"))
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_events",
-            "total_value",
-        )
-    )
+    return sessionized_stream(load_table(spark, "events", sf_dir))
 
 
 @register(

@@ -1,7 +1,7 @@
 """The merge-lattice maintenance protocol — ONE skeleton for every
 batch-partition streaming family.
 
-Eleven certified families ride this module (r14 unification of what
+Thirteen certified families ride this module (r14 unification of what
 was previously copied across sketch/sample/survivorship maintenance):
 
 ==============  =========================  ====================== =========
@@ -14,6 +14,8 @@ priority sample K+1 largest priorities     idempotent             sweep
 survivorship    argmax by okey (+ sum leg) idempotent (argmax)    sweep
 profile         per-source min/max         idempotent             sweep
 lsh index       distinct bucket rows       idempotent G-set       sweep
+nsw edges       distinct edge rows         idempotent G-set       sweep
+dedup matches   distinct match rows        idempotent G-set       sweep
 cms             cell-wise sum              NOT idempotent         manifest
 logbin          cell-wise sum              NOT idempotent         manifest
 topk (MG)       counter sum + error sum    NOT idempotent         manifest
@@ -48,12 +50,15 @@ Protocol invariants, stated once:
   semantics of any counting sketch (dedup upstream or use a G-set
   family when that matters).
 
-A family is ONE module-level ``LatticeFamily`` constant (``KMV``,
-``CMS``, ``PROFILE``, ...): name the checkpoint subdir, give the
-batch→partial projection and the fold, pick the lattice class. Callers
-pass that constant straight to the four functions below —
-``start_maintenance_stream``, ``maintain_batch``, ``compact_state`` and
-``read_state`` — with no per-family wrappers. Everything else — stream
+A family is ONE ``LatticeFamily`` value: a module-level constant
+(``KMV``, ``CMS``, ``PROFILE``, ...), or, for a family whose partial
+reads a fixed corpus, the value built by one function next to its
+kernel (``similarity.nsw_edges_family(sf_dir)``,
+``dedup.dedup_matches_family(sf_dir)``). It names the checkpoint
+subdir, gives the batch→partial projection and the fold, and picks the
+lattice class. Callers pass that value straight to the four functions
+below — ``start_maintenance_stream``, ``maintain_batch``,
+``compact_state`` and ``read_state`` — with no per-family wrappers. Everything else — stream
 wiring, live-partition enumeration (Hadoop FileSystem API, so HDFS/S3
 roots behave like local disk), crash-safe compaction, replay repair — is
 this module.

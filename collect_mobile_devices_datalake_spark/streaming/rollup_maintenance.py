@@ -18,8 +18,8 @@ the hourly level as events arrive. Three Spark capabilities compose:
 The foreachBatch sink writes each micro-batch's finalized rows into its
 own ``batch=<id>`` partition with mode=overwrite, so a checkpoint replay
 of a partially-committed batch rewrites the partition wholesale — the
-same replay-repair contract as the ingest/graph/dedup maintenance
-streams. At 100 TB the emitted rows number |closed hours x types| per
+same replay-repair contract as the ingest stream and the lattice
+families. At 100 TB the emitted rows number |closed hours x types| per
 trigger — the fact stream is aggregated before anything is written.
 
 Late data beyond the watermark is dropped by the engine (the standard

@@ -16,6 +16,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .windows import SESSION_GAP
+
 OUTPUT_SCHEMA = "user_id bigint, n_events bigint, total_value double"
 STATE_SCHEMA = "n bigint, total double"
 
@@ -48,7 +50,7 @@ def running_user_totals(events: DataFrame) -> DataFrame:
 # --- emit-on-close sessions via event-time state timeout -------------------
 
 CLOSED_SCHEMA = "user_id bigint, n_events bigint, total_value double"
-_GAP_MS = 30 * 60 * 1000  # same 30-min idle gap as windows.sessionized_stream
+_GAP_MS = pd.Timedelta(SESSION_GAP) // pd.Timedelta(milliseconds=1)
 
 
 def _close_on_timeout(

@@ -2,11 +2,13 @@
 
 The reference is an incremental pipeline with no event-time semantics;
 these add the watermark + window surface the rebuild promises. Each
-builder takes an (unbounded) streaming DataFrame with an event-time
-``ts`` column and returns the windowed aggregation — the SAME
-expressions the batch twins in ``operators/streaming_batch.py`` verify
-against the DuckDB oracle, so streaming correctness is anchored to the
-hash-checked batch semantics.
+builder takes an event-time ``ts`` frame and returns the windowed
+aggregation. The frame may be a stream or a static table: on a static
+frame Spark's optimizer drops the watermark, so the registered rows
+``events_tumbling_hourly``, ``events_sliding_2h_1h`` and
+``events_session_windows`` (``operators/streaming_batch.py``) ARE these
+builders applied to the ``events`` table, and the DuckDB oracle checks
+the code the streams run.
 
 Watermarks bound state: at 100 TB/day the 30-minute watermark caps the
 live window state regardless of total history.
@@ -17,19 +19,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.relational import dec
+from ..operators.relational import dsum
 
 WATERMARK = "30 minutes"
+SESSION_GAP = "30 minutes"  # idle gap that closes a user session
 
 
 def tumbling_counts_stream(events: DataFrame, width: str = "1 hour") -> DataFrame:
     return (
         events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", width), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(dec("value")).cast("double").alias("total_value"),
-        )
+        .agg(F.count("*").alias("n_events"), dsum("value").alias("total_value"))
         .select(
             F.col("window.start").alias("window_start"),
             F.col("window.end").alias("window_end"),
@@ -46,25 +46,27 @@ def sliding_counts_stream(
     return (
         events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", width, slide))
-        .agg(F.count("*").alias("n_events"))
+        .agg(F.count("*").alias("n_events"), dsum("value").alias("total_value"))
         .select(
             F.col("window.start").alias("window_start"),
             F.col("window.end").alias("window_end"),
             "n_events",
+            "total_value",
         )
     )
 
 
-def sessionized_stream(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
+def sessionized_stream(events: DataFrame, gap: str = SESSION_GAP) -> DataFrame:
     return (
         events.withWatermark("ts", WATERMARK)
         .groupBy(F.session_window("ts", gap), "user_id")
-        .agg(F.count("*").alias("n_events"))
+        .agg(F.count("*").alias("n_events"), dsum("value").alias("total_value"))
         .select(
             "user_id",
             F.col("session_window.start").alias("session_start"),
             F.col("session_window.end").alias("session_end"),
             "n_events",
+            "total_value",
         )
     )
 

@@ -176,6 +176,35 @@ def test_nsw_delta_matches_full_build_for_batch(spark):
     assert delta == full and len(delta) > 0
 
 
+def test_nsw_edges_for_batch_ignores_duplicate_vec_ids(spark):
+    """A micro-batch can hold one vector twice (a re-delivered file lands
+    in the same trigger as the original): its edges must be the
+    deduplicated batch's, not top-M lists filled with repeated pairs."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from collect_mobile_devices_datalake_spark.operators.similarity import (
+        DELTA_MOD,
+        DELTA_REM,
+        nsw_edges_for_batch,
+    )
+    from collect_mobile_devices_datalake_spark.session import load_table
+
+    batch = (
+        load_table(spark, "embeddings", SF)
+        .filter(F.col("vec_id") % DELTA_MOD == DELTA_REM)
+        .select("vec_id", "embedding")
+    )
+
+    def edges(b):
+        return Counter(tuple(r) for r in nsw_edges_for_batch(spark, SF, b).collect())
+
+    want = edges(batch)
+    assert sum(want.values()) > 0
+    assert edges(batch.unionByName(batch)) == want
+
+
 def test_zero_norm_cosine_guard_both_engines():
     """An all-zero embedding must score cosine 0.0 — not NaN/Inf — on BOTH
     engines, so Spark/DuckDB parity is structural rather than dependent on

@@ -7,6 +7,7 @@ import os
 import shutil
 import tempfile
 import uuid
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -563,23 +564,38 @@ def test_rocksdb_state_store_context_restores_conf(spark):
             spark.conf.set(_PROVIDER_KEY, before)
 
 
+def _state(spark, fam, state_dir):
+    """The family's read state as a multiset of row tuples."""
+    from collect_mobile_devices_datalake_spark.streaming import lattice
+
+    return Counter(
+        tuple(r) for r in lattice.read_state(spark, fam, state_dir).collect()
+    )
+
+
+def _run_family_stream(spark, fam, src, state_dir, ckpt):
+    from collect_mobile_devices_datalake_spark.streaming import lattice
+
+    q = lattice.start_maintenance_stream(spark, fam, src, state_dir, ckpt)
+    assert q.awaitTermination(120)
+
+
 def test_graph_maintenance_stream_matches_batch_delta(spark, tmp):
-    """The streaming maintenance loop must produce EXACTLY the edges the
-    batch delta operator computes, across chunked arrivals, a restart
-    with the same checkpoint, and a wholesale re-delivery of old files."""
+    """The NSW-edges family's stream must hold EXACTLY the edges the
+    batch delta operator computes, each once, across chunked arrivals, a
+    restart on the same checkpoint, a wholesale re-delivery of old files
+    and a compaction."""
     from collect_mobile_devices_datalake_spark.operators.similarity import (
         DELTA_MOD,
         DELTA_REM,
+        nsw_edges_family,
     )
     from collect_mobile_devices_datalake_spark.registry import REGISTRY
-    from collect_mobile_devices_datalake_spark.session import load_table
-    from collect_mobile_devices_datalake_spark.streaming.graph_maintenance import (
-        start_graph_maintenance_stream,
-    )
+    from collect_mobile_devices_datalake_spark.streaming import lattice
 
-    sf = SF
+    fam = nsw_edges_family(SF)
     arrivals = (
-        load_table(spark, "embeddings", sf)
+        load_table(spark, "embeddings", SF)
         .filter(F.col("vec_id") % DELTA_MOD == DELTA_REM)
         .select("vec_id", "embedding")
     )
@@ -589,59 +605,50 @@ def test_graph_maintenance_stream_matches_batch_delta(spark, tmp):
 
     first = arrivals.filter(F.col("vec_id") < 250)
     first.coalesce(1).write.mode("append").parquet(vec_dir)
-    q1 = start_graph_maintenance_stream(spark, vec_dir, graph_dir, sf, ckpt)
-    q1.awaitTermination(120)
+    _run_family_stream(spark, fam, vec_dir, graph_dir, ckpt)
 
     # second chunk lands; restart with the SAME checkpoint → only the delta
     arrivals.filter(F.col("vec_id") >= 250).coalesce(1).write.mode("append").parquet(vec_dir)
-    q2 = start_graph_maintenance_stream(spark, vec_dir, graph_dir, sf, ckpt)
-    q2.awaitTermination(120)
+    _run_family_stream(spark, fam, vec_dir, graph_dir, ckpt)
 
-    got = {
-        (r["src"], r["dst"], r["rk"]) for r in spark.read.parquet(graph_dir).collect()
-    }
-    want = {
-        (r["src"], r["dst"], r["rk"])
-        for r in REGISTRY["nsw_graph_delta"].spark(spark, sf).collect()
-    }
-    assert got == want and len(got) > 0
+    want = Counter(
+        tuple(r) for r in REGISTRY["nsw_graph_delta"].spark(spark, SF).collect()
+    )
+    assert set(want.values()) == {1}
+    assert _state(spark, fam, graph_dir) == want
 
-    # re-delivery: no new files → no-op; duplicate an old file under a new
-    # name → src anti-join keeps the graph unchanged
+    # re-delivery: an old file under a new name lands in a fresh batch;
+    # its edges are identical rows, absorbed by the distinct fold
     first.coalesce(1).write.mode("append").parquet(vec_dir)
-    q3 = start_graph_maintenance_stream(spark, vec_dir, graph_dir, sf, ckpt)
-    q3.awaitTermination(120)
-    again = {
-        (r["src"], r["dst"], r["rk"]) for r in spark.read.parquet(graph_dir).collect()
-    }
-    assert again == want
+    _run_family_stream(spark, fam, vec_dir, graph_dir, ckpt)
+    assert _state(spark, fam, graph_dir) == want
+    lattice.compact_state(spark, fam, graph_dir)
+    assert _state(spark, fam, graph_dir) == want
 
 
 def test_graph_maintenance_replay_repairs_partial_commit(spark, tmp):
     """Checkpoint replay of a PARTIALLY-committed batch must repair it —
     recompute every edge and overwrite the batch's partition wholesale —
-    not freeze the partial state (the src-guard deliberately excludes
-    the replayed batch's own partition)."""
+    not freeze the partial state."""
     from collect_mobile_devices_datalake_spark.operators.similarity import (
         DELTA_MOD,
         DELTA_REM,
+        nsw_edges_family,
     )
-    from collect_mobile_devices_datalake_spark.session import load_table
-    from collect_mobile_devices_datalake_spark.streaming.graph_maintenance import (
-        _maintain_batch,
-    )
+    from collect_mobile_devices_datalake_spark.streaming import lattice
 
+    fam = nsw_edges_family(SF)
     batch = (
         load_table(spark, "embeddings", SF)
         .filter(F.col("vec_id") % DELTA_MOD == DELTA_REM)
         .select("vec_id", "embedding")
     )
     graph_dir = os.path.join(tmp, "graph")
-    fn = _maintain_batch(graph_dir, SF)
+    fn = lattice.maintain_batch(fam, graph_dir)
 
     fn(batch, 0)
     bdir = os.path.join(graph_dir, "batch=0")
-    want = {(r["src"], r["dst"], r["rk"]) for r in spark.read.parquet(bdir).collect()}
+    want = _state(spark, fam, graph_dir)
     assert want
 
     # simulate a partial commit: drop committed part files (all of them
@@ -650,28 +657,25 @@ def test_graph_maintenance_replay_repairs_partial_commit(spark, tmp):
     removed = parts[: max(1, len(parts) // 2)]
     for n in removed:
         os.remove(os.path.join(bdir, n))
-    if len(removed) < len(parts):
-        partial = {
-            (r["src"], r["dst"], r["rk"]) for r in spark.read.parquet(bdir).collect()
-        }
-        assert partial != want
+    assert _state(spark, fam, graph_dir) != want
 
     # checkpoint replay re-invokes the SAME batch id → wholesale repair
     fn(batch, 0)
-    got = {(r["src"], r["dst"], r["rk"]) for r in spark.read.parquet(bdir).collect()}
-    assert got == want
+    assert _state(spark, fam, graph_dir) == want
 
 
 def test_dedup_maintenance_stream_matches_batch(spark, tmp):
-    """The streaming incremental-dedup loop must produce EXACTLY the
-    matches the batch R×S PPJoin computes for the full arrival set,
-    across chunked arrivals, a checkpoint restart, and a wholesale
-    re-delivery of old files."""
-    from collect_mobile_devices_datalake_spark.streaming.dedup_maintenance import (
+    """The dedup-matches family's stream must hold EXACTLY the matches
+    the batch R×S PPJoin computes for the full arrival set, each once,
+    across chunked arrivals, a checkpoint restart, a wholesale
+    re-delivery of old files and a compaction."""
+    from collect_mobile_devices_datalake_spark.operators.dedup import (
+        dedup_matches_family,
         incremental_matches_for_batch,
-        start_dedup_maintenance_stream,
     )
+    from collect_mobile_devices_datalake_spark.streaming import lattice
 
+    fam = dedup_matches_family(SF)
     arrivals = (
         load_table(spark, "documents", SF)
         .filter(F.col("doc_id") % 10 == 3)
@@ -683,72 +687,60 @@ def test_dedup_maintenance_stream_matches_batch(spark, tmp):
 
     first = arrivals.filter(F.col("doc_id") < 1_000_025)
     first.coalesce(1).write.mode("append").parquet(docs_dir)
-    q1 = start_dedup_maintenance_stream(spark, docs_dir, matches_dir, SF, ckpt)
-    q1.awaitTermination(120)
+    _run_family_stream(spark, fam, docs_dir, matches_dir, ckpt)
 
     arrivals.filter(F.col("doc_id") >= 1_000_025).coalesce(1).write.mode(
         "append"
     ).parquet(docs_dir)
-    q2 = start_dedup_maintenance_stream(spark, docs_dir, matches_dir, SF, ckpt)
-    q2.awaitTermination(120)
+    _run_family_stream(spark, fam, docs_dir, matches_dir, ckpt)
 
-    got = {
-        (r["new_doc"], r["dup_of"], r["jaccard"])
-        for r in spark.read.parquet(matches_dir).collect()
-    }
-    want = {
-        (r["new_doc"], r["dup_of"], r["jaccard"])
-        for r in incremental_matches_for_batch(spark, SF, arrivals).collect()
-    }
-    assert got == want and len(got) > 0
+    want = Counter(
+        tuple(r) for r in incremental_matches_for_batch(spark, SF, arrivals).collect()
+    )
+    assert set(want.values()) == {1}
+    got = _state(spark, fam, matches_dir)
+    assert got == want
     # every re-idded doc matches its original verbatim twin at jaccard 1.0
     assert {(d - 1_000_000 == o) for d, o, j in got if j == 1.0} == {True}
 
-    # re-delivery: duplicate the first file set under a new name → the
-    # new_doc anti-join keeps the decisions table unchanged
+    # re-delivery: the first file set under a new name lands in a fresh
+    # batch; its matches are identical rows, absorbed by the distinct fold
     first.coalesce(1).write.mode("append").parquet(docs_dir)
-    q3 = start_dedup_maintenance_stream(spark, docs_dir, matches_dir, SF, ckpt)
-    q3.awaitTermination(120)
-    again = {
-        (r["new_doc"], r["dup_of"], r["jaccard"])
-        for r in spark.read.parquet(matches_dir).collect()
-    }
-    assert again == want
+    _run_family_stream(spark, fam, docs_dir, matches_dir, ckpt)
+    assert _state(spark, fam, matches_dir) == want
+    lattice.compact_state(spark, fam, matches_dir)
+    assert _state(spark, fam, matches_dir) == want
 
 
 def test_dedup_maintenance_replay_repairs_partial_commit(spark, tmp):
     """Checkpoint replay of a partially-committed batch rewrites the
     batch partition wholesale — repair, not freeze."""
-    from collect_mobile_devices_datalake_spark.streaming.dedup_maintenance import (
-        _maintain_batch,
+    from collect_mobile_devices_datalake_spark.operators.dedup import (
+        dedup_matches_family,
     )
+    from collect_mobile_devices_datalake_spark.streaming import lattice
 
+    fam = dedup_matches_family(SF)
     batch = (
         load_table(spark, "documents", SF)
         .filter(F.col("doc_id") % 10 == 3)
         .select((F.col("doc_id") + 1_000_000).alias("doc_id"), "text")
     )
     matches_dir = os.path.join(tmp, "matches")
-    fn = _maintain_batch(matches_dir, SF)
+    fn = lattice.maintain_batch(fam, matches_dir)
 
     fn(batch, 0)
     bdir = os.path.join(matches_dir, "batch=0")
-    want = {
-        (r["new_doc"], r["dup_of"], r["jaccard"])
-        for r in spark.read.parquet(bdir).collect()
-    }
+    want = _state(spark, fam, matches_dir)
     assert want
 
     parts = [n for n in os.listdir(bdir) if n.endswith(".parquet")]
     for n in parts[: max(1, len(parts) // 2)]:
         os.remove(os.path.join(bdir, n))
+    assert _state(spark, fam, matches_dir) != want
 
     fn(batch, 0)
-    got = {
-        (r["new_doc"], r["dup_of"], r["jaccard"])
-        for r in spark.read.parquet(bdir).collect()
-    }
-    assert got == want
+    assert _state(spark, fam, matches_dir) == want
 
 
 def test_rollup_maintenance_finalizes_windows_exactly_once(spark, tmp):
@@ -1210,19 +1202,22 @@ def test_lshindex_state_equals_batch_index_and_absorbs_redelivery(spark, tmp_pat
     assert parts == ["batch=compacted"]
 
 
-# family constant -> the SF_SMOKE table its source_schema is drawn from
+# family constant (or the function that builds it over a corpus dir)
+# -> the SF table its source_schema is drawn from
 _LATTICE_FAMILIES = [
-    ("sketch_maintenance", "KMV", "documents"),
-    ("sketch_maintenance", "DAU", "events"),
-    ("sketch_maintenance", "CMS", "documents"),
-    ("sketch_maintenance", "LOGBIN", "orders"),
-    ("sketch_maintenance", "HLL", "documents"),
-    ("sketch_maintenance", "BLOOM", "orders"),
-    ("sample_maintenance", "SAMPLE", "documents"),
-    ("survivorship_maintenance", "SURVIVORSHIP", "events"),
-    ("profile_maintenance", "PROFILE", "documents"),
-    ("topk_maintenance", "TOPK", "documents"),
-    ("lshindex_maintenance", "LSHINDEX", "embeddings"),
+    ("streaming.sketch_maintenance", "KMV", "documents"),
+    ("streaming.sketch_maintenance", "DAU", "events"),
+    ("streaming.sketch_maintenance", "CMS", "documents"),
+    ("streaming.sketch_maintenance", "LOGBIN", "orders"),
+    ("streaming.sketch_maintenance", "HLL", "documents"),
+    ("streaming.sketch_maintenance", "BLOOM", "orders"),
+    ("streaming.sample_maintenance", "SAMPLE", "documents"),
+    ("streaming.survivorship_maintenance", "SURVIVORSHIP", "events"),
+    ("streaming.profile_maintenance", "PROFILE", "documents"),
+    ("streaming.topk_maintenance", "TOPK", "documents"),
+    ("streaming.lshindex_maintenance", "LSHINDEX", "embeddings"),
+    ("operators.similarity", "nsw_edges_family", "embeddings"),
+    ("operators.dedup", "dedup_matches_family", "documents"),
 ]
 
 
@@ -1235,16 +1230,15 @@ def test_lattice_family_laws(spark, tmp_path, module, family, table):
     partition wholesale and leaves the read state unchanged, and
     compaction leaves the read state unchanged."""
     import importlib
-    from collections import Counter
 
     from collect_mobile_devices_datalake_spark.streaming import lattice
 
     fam = getattr(
-        importlib.import_module(
-            f"collect_mobile_devices_datalake_spark.streaming.{module}"
-        ),
+        importlib.import_module(f"collect_mobile_devices_datalake_spark.{module}"),
         family,
     )
+    if not isinstance(fam, lattice.LatticeFamily):
+        fam = fam(SF)
     schema = spark.createDataFrame([], fam.source_schema).schema
     rows = load_table(spark, table, SF).select(
         *[F.col(f.name).cast(f.dataType) for f in schema.fields]
