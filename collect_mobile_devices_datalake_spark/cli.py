@@ -119,14 +119,9 @@ def main(argv: list[str] | None = None) -> int:
                 os.path.basename(p)
                 for p in manifest.committed_files(args.lake_dir, table)
             ]
-            txn = manifest.new_txn_id()
-            names = manifest.stage_write(
-                pages.select("url"), args.lake_dir, table, txn
-            )
-            manifest.publish(
+            manifest.commit_tables(
                 args.lake_dir,
-                txn,
-                {table: names},
+                [(table, pages.select("url"))],
                 removes={table: olds} if olds else None,
             )
             print(f"{source}: frontier initialized ({pages.count()} urls)")
@@ -134,10 +129,12 @@ def main(argv: list[str] | None = None) -> int:
             n = ingest_source(spark, pages, args.lake_dir, source)
             print(f"{source}: ingested {n} new records")
         else:
+            # an empty lake has no device_specs files; any other read
+            # error (a corrupt footer) must surface, not read as 0
             try:
                 view = device_specs_view(spark, args.lake_dir)
                 n = view.filter(F.col("source") == source).count()
-            except Exception:
+            except FileNotFoundError:
                 n = 0
             print(f"{source}: {n} records in lake")
     return 0

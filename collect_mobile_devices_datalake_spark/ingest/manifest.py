@@ -305,10 +305,17 @@ def compact_manifests(lake_dir: str) -> str | None:
 
 
 def commit_tables(
-    lake_dir: str, frames: Iterable[tuple[str, DataFrame]], txn_id: str | None = None
+    lake_dir: str,
+    frames: Iterable[tuple[str, DataFrame]],
+    txn_id: str | None = None,
+    removes: dict[str, list[str]] | None = None,
 ) -> str | None:
     """Stage every (table, df) pair then publish one manifest — the
-    one-call form of the protocol for multi-table transactions."""
+    one-call form of the protocol for multi-table transactions, and the
+    one every package writer commits through. ``removes`` is `publish`'s:
+    a transaction that only removes files (a truncate to an empty
+    table) still publishes; one with neither new nor removed files
+    publishes nothing."""
     txn = txn_id or new_txn_id()
     if committed(lake_dir, txn):
         return None
@@ -317,9 +324,9 @@ def commit_tables(
         names = stage_write(df, lake_dir, table, txn)
         if names:
             tables[table] = names
-    if not tables:
+    if not tables and not removes:
         return None
-    return publish(lake_dir, txn, tables)
+    return publish(lake_dir, txn, tables, removes=removes)
 
 
 def rewrite_table(
@@ -363,11 +370,9 @@ def rewrite_table(
         )
     else:
         df = df.coalesce(target_files)
-    txn = f"rewrite{new_txn_id()}"
-    names = stage_write(df, lake_dir, table, txn)
-    return publish(
+    return commit_tables(
         lake_dir,
-        txn,
-        {table: names},
+        [(table, df)],
+        txn_id=f"rewrite{new_txn_id()}",
         removes={table: [os.path.basename(p) for p in olds]},
     )

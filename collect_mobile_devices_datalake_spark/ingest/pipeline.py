@@ -31,13 +31,12 @@ from committed manifests only (orphans from crashed writers invisible).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.normalize import brand_model_split, merge_last_wins, to_key
 from ..sources.parse import PARSERS
+from . import manifest
 
 SPEC_SPINE = ["source", "brand", "model", "src_url", "img_url", "crawled_at"]
 
@@ -52,7 +51,10 @@ def normalize_records(parsed: DataFrame, source: str) -> DataFrame:
         # app.js:629-635: only the geekbench handler derives a device class
         # from the URL (`url.split('com/')[1].split('_')[0]`) and forces
         # brand='Apple' (model NOT shifted) when it is 'ios'.
-        device = F.split(F.split(F.col("url"), "com/").getItem(1), "_").getItem(0)
+        # F.get, not getItem: a url without "com/" yields NULL (the plain
+        # brand/model split) instead of an ANSI index error that would
+        # fail the whole batch
+        device = F.get(F.split(F.get(F.split(F.col("url"), "com/"), 1), "_"), 0)
         bm = brand_model_split(F.col("model_raw"), device)
     else:
         bm = brand_model_split(F.col("model_raw"))
@@ -74,8 +76,6 @@ def _log(spark: SparkSession, lake_dir: str, source: str, event: str, n: int) ->
     half-written part file; the log is telemetry, deliberately in its
     OWN transaction (it records the attempt even when the data commit
     later fails)."""
-    from . import manifest
-
     df = spark.createDataFrame(
         [(source, event, n)], "source string, event string, n bigint"
     ).withColumn("ts", F.current_timestamp())
@@ -83,8 +83,6 @@ def _log(spark: SparkSession, lake_dir: str, source: str, event: str, n: int) ->
 
 
 def read_logs(spark: SparkSession, lake_dir: str) -> DataFrame:
-    from . import manifest
-
     return manifest.read_committed(
         spark,
         lake_dir,
@@ -94,8 +92,6 @@ def read_logs(spark: SparkSession, lake_dir: str) -> DataFrame:
 
 
 def _read_saved(spark: SparkSession, lake_dir: str, source: str) -> DataFrame:
-    from . import manifest
-
     return manifest.read_committed(
         spark, lake_dir, f"saved_list/{source}", schema="url string"
     )
@@ -121,12 +117,19 @@ def pending_pages(
 
 
 def ingest_source(
-    spark: SparkSession, pages: DataFrame, lake_dir: str, source: str
+    spark: SparkSession,
+    pages: DataFrame,
+    lake_dir: str,
+    source: str,
+    txn_id: str | None = None,
 ) -> int:
     """Incremental ingest of one source's pages into the lake.
 
     Returns the number of newly ingested records. Re-running with the
     same pages is a no-op (resume anti-join), matching ``crawl_resume``.
+    ``txn_id`` names the data transaction (a fresh id when None); the
+    streamed crawl passes one per micro-batch so a replayed batch id is
+    a committed no-op (``streaming/pipeline.py``).
     """
     # Parse ONCE per batch: the fetch→parse pandas-UDF pipeline is the
     # dominant batch cost, and every later action reads it (the counts,
@@ -174,9 +177,7 @@ def ingest_source(
                 )
             )
         if tables:
-            from . import manifest
-
-            manifest.commit_tables(lake_dir, tables)
+            manifest.commit_tables(lake_dir, tables, txn_id=txn_id)
     finally:
         parsed.unpersist()
     return n
@@ -191,8 +192,6 @@ def device_specs_view(spark: SparkSession, lake_dir: str) -> DataFrame:
     any batch that crashed before its manifest published.
     """
     from pyspark.sql.window import Window
-
-    from . import manifest
 
     df = manifest.read_committed(spark, lake_dir, "device_specs")
     w = Window.partitionBy("src_url").orderBy("crawled_at")

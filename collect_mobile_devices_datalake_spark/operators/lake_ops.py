@@ -12,13 +12,15 @@ Scale notes on each operator's plan are in its ``doc=``.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import artifacts
 from ..registry import register
-from ..session import load_table
+from ..session import load_table, read_parquet
 
 _ORDER_COLS = [
     "o_custkey",
@@ -740,19 +742,19 @@ def _time_travel_lake(spark: SparkSession, sf_dir: str) -> str:
     def build() -> str:
         path = artifacts.scratch_dir("tt_lake")
         orders = load_table(spark, "orders", sf_dir)
-        n1 = manifest.stage_write(
-            orders.filter(F.col("o_orderkey") % 3 == 0), path, "orders", "tt1"
-        )
-        manifest.publish(path, "tt1", {"orders": n1})
-        n2 = manifest.stage_write(
-            orders.filter(F.col("o_orderkey") % 3 == 1), path, "orders", "tt2"
-        )
-        manifest.publish(path, "tt2", {"orders": n2})
+        for txn, rem in (("tt1", 0), ("tt2", 1)):
+            manifest.commit_tables(
+                path, [("orders", orders.filter(F.col("o_orderkey") % 3 == rem))], txn
+            )
         # rewrite: read the CURRENT committed snapshot, compact it into fresh
         # files, and publish with `removes` — content-identical by construction
-        cur = manifest.read_committed(spark, path, "orders")
-        n3 = manifest.stage_write(cur.repartition(2), path, "orders", "tt3")
-        manifest.publish(path, "tt3", {"orders": n3}, removes={"orders": n1 + n2})
+        olds = manifest.committed_files(path, "orders")
+        manifest.commit_tables(
+            path,
+            [("orders", read_parquet(spark, *olds).repartition(2))],
+            "tt3",
+            removes={"orders": [os.path.basename(p) for p in olds]},
+        )
         return path
 
     return artifacts.get_or_build(spark, "tt_lake", "", [(sf_dir, "orders")], build)

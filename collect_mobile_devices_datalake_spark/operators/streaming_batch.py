@@ -19,6 +19,7 @@ from ..registry import register
 from ..session import load_table, parquet_rows, read_parquet
 from ..streaming import lattice
 from ..streaming.windows import (
+    EVENTS_SCHEMA,
     sessionized_stream,
     sliding_counts_stream,
     tumbling_counts_stream,
@@ -802,10 +803,6 @@ def q_streaming_rollup_day_grain(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup = os.path.join(base, "hour")
     derived = os.path.join(base, "dm")
     ckpt = os.path.join(base, "ckpt")
-    schema = (
-        "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-        "value double, props string"
-    )
     ev = load_table(spark, "events", sf_dir).select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
@@ -813,7 +810,7 @@ def q_streaming_rollup_day_grain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def run(max_files_per_trigger: int) -> None:
         q = start_rollup_maintenance_stream(
-            spark, src, rollup, ckpt, schema,
+            spark, src, rollup, ckpt, EVENTS_SCHEMA,
             max_files_per_trigger=max_files_per_trigger, derived_dir=derived,
         )
         _await_or_fail(q)

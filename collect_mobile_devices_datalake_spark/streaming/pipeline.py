@@ -1,13 +1,28 @@
-"""Streaming ingest: file-source frontier → foreachBatch idempotent upsert.
+"""Streaming ingest: file-source frontier → the batch crawl's commit path.
 
 This is ``crawl`` as a continuous pipeline (SURVEY §2.7): new page files
-landing in a directory are the frontier; each micro-batch parses,
-normalizes and MERGEs into the lake keyed on ``src_url``; the streaming
-checkpoint replaces the ``saved_list`` table — kill the query and
-restart with the same checkpoint dir and processing resumes exactly
-where it stopped (the semantics ``crawl_resume`` app.js:457-482
-approximates with at-least-once delivery; the checkpoint + idempotent
-upsert make it effectively-once).
+landing in a directory are the frontier, and each micro-batch runs the
+ONE crawl core, ``ingest.pipeline.ingest_source``: the resume against
+the committed ``saved_list``, the extraction, the dead-letter
+quarantine, and one manifest transaction for ``device_specs``,
+``saved_list`` and ``dead_letter`` (``crawl_resume`` +
+``save_data_to_mysql``, app.js:441-482). A stream and a batch crawl of
+one frontier therefore commit the same lake, and either resumes where
+the other stopped.
+
+Exactly-once: each micro-batch commits under the deterministic txn id
+``stream-<source>-<batch id>``. A batch whose manifest is already in
+the log replays as a `committed` no-op without reading the lake; one
+that crashed before its commit re-runs under the same txn id. A
+re-delivery of committed pages under a NEW batch id (e.g. a fresh
+checkpoint) passes through the resume and ingests nothing.
+
+Concurrency: the stream and a batch crawl are meant to run one after
+the other. Two crawls of one source running at the same time can both
+pass the resume before either commits; both then commit the same
+pages, and the keep-first ``device_specs_view`` collapses the duplicate
+rows. Exclusive commit-sequence claims and conflict checks are not part
+of the manifest protocol yet.
 """
 
 from __future__ import annotations
@@ -15,52 +30,20 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..session import read_parquet
-
-EVENTS_SCHEMA = (
-    "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-    "value double, props string"
-)
+from ..ingest import manifest
+from ..ingest.pipeline import ingest_source
 
 PAGES_SCHEMA = "url string, source string, status int, html string"
 
 
 def _upsert_batch(lake_dir: str, source: str) -> Callable[[DataFrame, int], None]:
-    from ..ingest.pipeline import normalize_records
-    from ..sources.parse import PARSERS
-
     def fn(batch: DataFrame, batch_id: int) -> None:
-        from ..ingest import manifest
-
-        # deterministic txn id per (source, batch id): a batch that crashed
-        # AFTER its manifest published replays as a committed no-op —
-        # exactly-once without even reading the lake.
         txn = f"stream-{source}-{batch_id}"
         if manifest.committed(lake_dir, txn):
             return
-        ok = batch.filter(F.col("status") == 200)
-        parsed = PARSERS[source](ok).filter(F.col("entries").isNotNull())
-        records = normalize_records(parsed, source)
-        table = f"device_specs_stream/{source}"
-        # append-only MERGE emulation: anti-join against the COMMITTED
-        # snapshot makes overlapping batches a no-op, and the manifest
-        # publish makes the write itself atomic (a batch that crashed
-        # between staging and publish left only invisible orphans).
-        # Transient read failures (corrupt footer, IO error) must fail the
-        # batch so the checkpoint retries it — a swallowed error here would
-        # silently downgrade effectively-once to at-least-once.
-        files = manifest.committed_files(lake_dir, table)
-        if files:
-            existing = read_parquet(batch.sparkSession, *files).select("src_url")
-            fresh = records.join(existing, "src_url", "left_anti")
-        else:
-            fresh = records
-        names = manifest.stage_write(fresh, lake_dir, table, txn)
-        if names:
-            manifest.publish(lake_dir, txn, {table: names})
+        ingest_source(batch.sparkSession, batch, lake_dir, source, txn_id=txn)
 
     return fn
 

@@ -30,11 +30,7 @@ from pyspark.sql import functions as F
 
 from ..operators.advanced import survivorship_keyed
 from .lattice import LatticeFamily
-
-SURV_EVENTS_SCHEMA = (
-    "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-    "value double, props string"
-)
+from .windows import EVENTS_SCHEMA
 
 
 def survivorship_partial(batch: DataFrame) -> DataFrame:
@@ -68,7 +64,7 @@ def _golden_aggs() -> list:
 # legs; n_events carries the documented sum caveat).
 SURVIVORSHIP = LatticeFamily(
     name="surv",
-    source_schema=SURV_EVENTS_SCHEMA,
+    source_schema=EVENTS_SCHEMA,
     partial_fn=survivorship_partial,
     # compaction keeps okey (the merge key) for later comparisons...
     fold_fn=lambda u: u.groupBy("user_id").agg(

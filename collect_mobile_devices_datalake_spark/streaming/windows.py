@@ -21,6 +21,11 @@ from pyspark.sql import functions as F
 
 from ..operators.relational import dsum
 
+EVENTS_SCHEMA = (
+    "event_id bigint, ts timestamp, user_id bigint, event_type string, "
+    "value double, props string"
+)
+
 WATERMARK = "30 minutes"
 SESSION_GAP = "30 minutes"  # idle gap that closes a user session
 

@@ -62,6 +62,30 @@ def test_cli_init_crawl_status(spark, capsys):
         shutil.rmtree(lake, ignore_errors=True)
 
 
+def test_cli_status_empty_lake_is_zero_corrupt_lake_raises(spark, capsys):
+    """``status`` reads an empty lake as 0 records, but a read error on a
+    committed file (a corrupt footer) fails the command instead of
+    printing 0."""
+    import pytest
+
+    from collect_mobile_devices_datalake_spark.cli import main
+    from collect_mobile_devices_datalake_spark.ingest import manifest
+
+    lake = tempfile.mkdtemp(prefix="cli_")
+    try:
+        assert main(["versus", "status", "--sf-dir", SF, "--lake-dir", lake]) == 0
+        assert "versus: 0 records in lake" in capsys.readouterr().out
+
+        assert main(["versus", "crawl", "--sf-dir", SF, "--lake-dir", lake]) == 0
+        for path in manifest.committed_files(lake, "device_specs/versus"):
+            with open(path, "wb") as f:
+                f.write(b"not a parquet file")
+        with pytest.raises(Exception):
+            main(["versus", "status", "--sf-dir", SF, "--lake-dir", lake])
+    finally:
+        shutil.rmtree(lake, ignore_errors=True)
+
+
 def test_cli_lake_maintenance_modes(spark):
     """history / vacuum / compact CLI modes drive the manifest protocol
     end to end: crawl commits, history lists the txns, an injected

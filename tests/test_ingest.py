@@ -95,6 +95,25 @@ def test_ingest_geekbench_ios_brand_override(spark, lake):
     assert android.filter(F.col("model").startswith("Brand#")).count() == 0
 
 
+def test_geekbench_url_without_com_segment_takes_the_plain_split(spark, lake):
+    """A geekbench url with no ``com/`` has no device segment: its record
+    gets the plain brand/model split, and the rest of the batch still
+    ingests (no ANSI array-index error fails the whole crawl)."""
+    from collect_mobile_devices_datalake_spark.ingest import manifest
+
+    # p_1 renders as an ios page; p_3 is a 500 and is skipped
+    part = load_table(spark, "part", SF).filter(F.col("p_partkey").between(1, 4))
+    pages = spec_pages(part, "geekbench")
+    odd = "https://example.org/x"
+    pages = pages.withColumn(
+        "url", F.when(F.col("url").endswith("/p_1"), F.lit(odd)).otherwise(F.col("url"))
+    )
+    assert ingest_source(spark, pages, lake, "geekbench") == 3
+    raw = manifest.read_committed(spark, lake, "device_specs/geekbench")
+    row = raw.filter(F.col("src_url") == odd).first()
+    assert row["brand"].startswith("Brand#") and not row["model"].startswith("Brand#")
+
+
 def test_resume_gate_null_url_non_200_and_duplicate_urls(spark, lake):
     """What the resume gate lets through. A page with a null url or a
     non-200 status is neither ingested nor checkpointed. Duplicate-url

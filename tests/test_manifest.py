@@ -102,13 +102,13 @@ def test_ingest_crash_then_replay_repairs(spark, lake, monkeypatch):
 
     real_publish = manifest.publish
 
-    def exploding_publish(lake_dir, txn_id, tables):
+    def exploding_publish(lake_dir, txn_id, tables, removes=None):
         # The telemetry log commits in its OWN txn by design (it records
         # the attempt even when the data commit fails) — crash only the
         # data transaction, after its files are staged.
         if any(t.startswith("device_specs") for t in tables):
             raise OSError("injected crash before manifest publish")
-        return real_publish(lake_dir, txn_id, tables)
+        return real_publish(lake_dir, txn_id, tables, removes=removes)
 
     monkeypatch.setattr(manifest, "publish", exploding_publish)
     with pytest.raises(OSError, match="injected crash"):
@@ -171,11 +171,13 @@ def test_streaming_replay_of_committed_batch_is_noop(spark, lake):
     pages = spec_pages(part, "productz").filter(F.col("p_partkey") < 100)
     fn = _upsert_batch(lake, "productz")
     fn(pages, 7)
-    table = "device_specs_stream/productz"
+    table = "device_specs/productz"
     n1 = len(manifest.committed_files(lake, table))
     assert n1 > 0
+    n_manifests = len(manifest.manifest_paths(lake))
     fn(pages, 7)  # replay: committed txn → immediate no-op
     assert len(manifest.committed_files(lake, table)) == n1
+    assert len(manifest.manifest_paths(lake)) == n_manifests
     got = manifest.read_committed(spark, lake, table)
     assert got.count() == pages.count()
     assert got.select("src_url").distinct().count() == pages.count()

@@ -12,13 +12,19 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
+from collect_mobile_devices_datalake_spark.ingest import manifest
+from collect_mobile_devices_datalake_spark.ingest.pipeline import (
+    device_specs_view,
+    ingest_source,
+)
 from collect_mobile_devices_datalake_spark.session import load_table
 from collect_mobile_devices_datalake_spark.sources.fixtures import spec_pages
 from collect_mobile_devices_datalake_spark.streaming.pipeline import (
-    EVENTS_SCHEMA,
+    _upsert_batch,
     start_ingest_stream,
 )
 from collect_mobile_devices_datalake_spark.streaming.windows import (
+    EVENTS_SCHEMA,
     dedup_stream,
     dedup_within_watermark_stream,
     tumbling_counts_stream,
@@ -115,83 +121,78 @@ def test_ingest_stream_kill_and_resume(spark, tmp):
     first = pages.filter(F.col("p_partkey") < 100)
     first.coalesce(1).write.mode("append").parquet(pages_dir)
 
+    def committed():
+        return manifest.read_committed(spark, lake, "device_specs/productz")
+
     q1 = start_ingest_stream(spark, pages_dir, lake, "productz", ckpt)
     q1.awaitTermination(120)
-    target = os.path.join(lake, "device_specs_stream", "productz")
-    n1 = spark.read.parquet(target).count()
-    assert n1 == first.count()
+    assert committed().count() == first.count()
 
     # "kill": query already stopped (availableNow). Restart with the SAME
     # checkpoint after more pages land — only the delta is processed, and
-    # re-delivery cannot duplicate (anti-join upsert).
+    # re-delivery cannot duplicate (resume anti-join on the saved_list).
     pages.filter(F.col("p_partkey") >= 100).coalesce(1).write.mode("append").parquet(pages_dir)
     q2 = start_ingest_stream(spark, pages_dir, lake, "productz", ckpt)
     q2.awaitTermination(120)
-    df = spark.read.parquet(target)
+    df = committed()
     assert df.count() == pages.count()
     assert df.select("src_url").distinct().count() == pages.count()
 
     # third run with nothing new: checkpoint says all files done → no-op
     q3 = start_ingest_stream(spark, pages_dir, lake, "productz", ckpt)
     q3.awaitTermination(120)
-    assert spark.read.parquet(target).count() == pages.count()
+    assert committed().count() == pages.count()
 
 
 def test_upsert_batch_replay_idempotent(spark, tmp):
     """Forced batch replay (SURVEY §2.7 exactly-once vs the reference's
     at-least-once, app.js:449-453): foreachBatch may re-deliver a batch id
     after a crash between the sink write and the checkpoint commit. Calling
-    the upsert body twice with the SAME batch must leave the lake exactly
-    as one delivery would — the src_url anti-join is the MERGE guard."""
-    from collect_mobile_devices_datalake_spark.streaming.pipeline import (
-        _upsert_batch,
-    )
-
+    the batch body twice with the SAME batch must leave the lake exactly
+    as one delivery would — the committed txn gate returns before any
+    work, and the resume anti-join guards an overlapping later batch."""
     part = load_table(spark, "part", SF)
     pages = spec_pages(part, "productz").filter(F.col("p_partkey") < 200)
     lake = os.path.join(tmp, "lake")
     fn = _upsert_batch(lake, "productz")
 
+    def committed():
+        return manifest.read_committed(spark, lake, "device_specs/productz")
+
     fn(pages, 0)  # normal delivery
-    target = os.path.join(lake, "device_specs_stream", "productz")
-    n1 = spark.read.parquet(target).count()
+    n1 = committed().count()
     assert n1 == pages.count()
+    n_manifests = len(manifest.manifest_paths(lake))
 
     fn(pages, 0)  # replay of the same batch id after a simulated crash
-    replayed = spark.read.parquet(target)
+    assert len(manifest.manifest_paths(lake)) == n_manifests
+    replayed = committed()
     assert replayed.count() == n1
     assert replayed.select("src_url").distinct().count() == n1
 
     # overlapping later batch: only genuinely-new urls land
     overlap = spec_pages(part, "productz").filter(F.col("p_partkey") < 300)
     fn(overlap, 1)
-    assert spark.read.parquet(target).count() == overlap.count()
-    assert (
-        spark.read.parquet(target).select("src_url").distinct().count()
-        == overlap.count()
-    )
+    assert committed().count() == overlap.count()
+    assert committed().select("src_url").distinct().count() == overlap.count()
 
 
 def test_upsert_batch_read_error_fails_batch(spark, tmp):
-    """A transient/corrupt read of the existing lake must FAIL the batch
-    (so checkpoint replay retries) — not silently disable the anti-join
-    and append duplicates."""
-    from collect_mobile_devices_datalake_spark.streaming.pipeline import (
-        _upsert_batch,
-    )
-
+    """A transient/corrupt read of the committed saved_list — what the
+    resume anti-join reads — must FAIL the batch (so checkpoint replay
+    retries), not silently disable the resume and append duplicates."""
     part = load_table(spark, "part", SF)
     pages = spec_pages(part, "productz").filter(F.col("p_partkey") < 50)
     lake = os.path.join(tmp, "lake")
-    target = os.path.join(lake, "device_specs_stream", "productz")
     fn = _upsert_batch(lake, "productz")
     fn(pages, 0)
 
-    # corrupt every part file's footer in place
-    for name in os.listdir(target):
-        if name.endswith(".parquet"):
-            with open(os.path.join(target, name), "wb") as f:
-                f.write(b"not a parquet file")
+    # corrupt every committed saved_list file's footer in place
+    saved = manifest.committed_files(lake, "saved_list/productz")
+    assert saved
+    for path in saved:
+        with open(path, "wb") as f:
+            f.write(b"not a parquet file")
     with pytest.raises(Exception):
         fn(pages, 1)
 
@@ -243,8 +244,51 @@ def test_ingest_stream_rate_limited_batches(spark, tmp):
     q.awaitTermination(120)
     batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
     assert len(batches) == 3
-    target = os.path.join(lake, "device_specs_stream", "versus")
-    assert spark.read.parquet(target).count() == part.count()
+    committed = manifest.read_committed(spark, lake, "device_specs/versus")
+    assert committed.count() == part.count()
+
+
+def test_stream_and_batch_crawl_commit_the_same_lake(spark, tmp):
+    """One crawl core: an availableNow stream over a frontier split into
+    three files commits the same device_specs, saved_list and dead_letter
+    rows as a batch crawl of that frontier (non-200 pages skipped, the
+    broken page quarantined), and a batch crawl after the stream finds
+    nothing left to ingest."""
+    part = load_table(spark, "part", SF)
+    broken = F.col("url").endswith("/p_5")
+    pages = spec_pages(part, "geekbench").withColumn(
+        "html",
+        F.when(broken, F.concat("html", F.lit('<span class="score">1</span>'))).otherwise(
+            F.col("html")
+        ),
+    )
+    pages_dir = os.path.join(tmp, "pages")
+    for i in range(3):
+        pages.filter(F.col("p_partkey") % 3 == i).coalesce(1).write.mode(
+            "append"
+        ).parquet(pages_dir)
+    streamed, batched = os.path.join(tmp, "lake_s"), os.path.join(tmp, "lake_b")
+    q = start_ingest_stream(
+        spark, pages_dir, streamed, "geekbench", os.path.join(tmp, "ckpt"),
+        max_files_per_trigger=1,
+    )
+    q.awaitTermination(180)
+    n_batch = ingest_source(spark, pages, batched, "geekbench")
+
+    def rows(lake, table):
+        df = manifest.read_committed(spark, lake, f"{table}/geekbench")
+        return Counter(
+            tuple(tuple(sorted(v.items())) if isinstance(v, dict) else v for v in r)
+            for r in df.drop("crawled_at").collect()
+        )
+
+    for table in ("device_specs", "saved_list", "dead_letter"):
+        assert rows(streamed, table) == rows(batched, table), table
+    n_bad = part.filter(F.col("p_partkey") % 29 == 3).count()
+    assert n_batch == part.count() - n_bad - 1
+    assert sum(rows(streamed, "dead_letter").values()) == 1
+    assert device_specs_view(spark, streamed).count() == n_batch
+    assert ingest_source(spark, pages, streamed, "geekbench") == 0
 
 
 def test_watermark_drops_late_data(spark, tmp):
@@ -751,10 +795,9 @@ def test_rollup_maintenance_finalizes_windows_exactly_once(spark, tmp):
     d, ev = _events_dir(spark, tmp)
     rollup = os.path.join(tmp, "rollup")
     ckpt = os.path.join(tmp, "rollup_ckpt")
-    schema = "event_id bigint, ts timestamp, user_id bigint, event_type string, value double, props string"
 
     def run():
-        q = start_rollup_maintenance_stream(spark, d, rollup, ckpt, schema)
+        q = start_rollup_maintenance_stream(spark, d, rollup, ckpt, EVENTS_SCHEMA)
         q.awaitTermination(180)
 
     run()  # ingest the real chunks; their windows are still open
@@ -764,7 +807,7 @@ def test_rollup_maintenance_finalizes_windows_exactly_once(spark, tmp):
     max_ts = ev.agg(F.max("ts")).collect()[0][0]
     sentinel = spark.createDataFrame(
         [(10**9, max_ts, 0, "sentinel", 0.0, "{}")],
-        schema,
+        EVENTS_SCHEMA,
     ).withColumn("ts", F.col("ts") + F.expr("INTERVAL 3 HOURS"))
     sentinel.coalesce(1).write.mode("append").parquet(d)
     run()
@@ -823,14 +866,10 @@ def test_rollup_hierarchy_stream_matches_batch_all_grains(spark, tmp):
     rollup = os.path.join(tmp, "rollup_h")
     derived = os.path.join(tmp, "rollup_dm")
     ckpt = os.path.join(tmp, "rollup_h_ckpt")
-    schema = (
-        "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-        "value double, props string"
-    )
 
     def run():
         q = start_rollup_maintenance_stream(
-            spark, d, rollup, ckpt, schema, derived_dir=derived
+            spark, d, rollup, ckpt, EVENTS_SCHEMA, derived_dir=derived
         )
         q.awaitTermination(180)
 
@@ -839,7 +878,7 @@ def test_rollup_hierarchy_stream_matches_batch_all_grains(spark, tmp):
     # sentinel #1: 40 days past the end — finalizes every REAL hour, and
     # (once ITS hour finalizes) closes every real day and month
     max_ts = ev.agg(F.max("ts")).collect()[0][0]
-    s1 = spark.createDataFrame([(10**9, max_ts, 0, "sentinel", 0.0, "{}")], schema)
+    s1 = spark.createDataFrame([(10**9, max_ts, 0, "sentinel", 0.0, "{}")], EVENTS_SCHEMA)
     s1.withColumn("ts", F.col("ts") + F.expr("INTERVAL 960 HOURS")).coalesce(
         1
     ).write.mode("append").parquet(d)
